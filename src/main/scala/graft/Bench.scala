@@ -33,6 +33,16 @@ object Bench {
     (r.getLong(0), if (r.isNullAt(1)) None else Some(r.getLong(1)))
   }
 
+  /** The dev iteration filter Bench, Verify and ScaleProbe share:
+    * `SPARK_GRAFT_ONLY` holds comma-separated name prefixes (a full
+    * name is its own prefix). Unset, every name is selected.
+    */
+  def selected(name: String): Boolean =
+    onlyPrefixes.forall(_.exists(name.startsWith))
+
+  private lazy val onlyPrefixes = sys.env.get("SPARK_GRAFT_ONLY")
+    .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -47,13 +57,8 @@ object Bench {
       }
     val errors = scala.collection.mutable.Map[String, String]()
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
-    // Local-iteration filter: comma-separated query-name prefixes. The
-    // driver never sets it, so driver runs always time the full registry.
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-    val selected = SparkEntry.queries.toSeq.sortBy(_._1).filter { case (n, _) =>
-      only.forall(_.exists(n.startsWith))
-    }
+    val picked = SparkEntry.queries.toSeq.sortBy(_._1)
+      .filter { case (n, _) => selected(n) }
     // Sweep-major reps: run the WHOLE registry `reps` times and take each
     // query's min across sweeps. Back-to-back per-query reps (r3) let a
     // time-localized interference window on the host poison all reps of
@@ -77,7 +82,7 @@ object Bench {
     val sweepTotals = scala.collection.mutable.ArrayBuffer[Double]()
     (1 to reps).foreach { _ =>
       var sweepTotal = 0.0
-      selected.foreach { case (name, fn) =>
+      picked.foreach { case (name, fn) =>
         CacheScope.harness.release()
         spark.catalog.clearCache()
         val t0 = System.nanoTime()
@@ -100,7 +105,7 @@ object Bench {
       sweepTotals += sweepTotal
       loads += loadavg()
     }
-    val results = selected.map { case (name, _) =>
+    val results = picked.map { case (name, _) =>
       name -> best.getOrElse(name, 0.0)
     }
     val ok = results.filterNot { case (k, _) => errors.contains(k) }

@@ -38,6 +38,17 @@ object Registry {
   def tf(s: SparkSession, dir: String, name: String): DataFrame =
     graft.sources.Scans.withParallelismFloor(t(s, dir, name))
 
+  /** The 25-key cross-scale media plant the m14/m17/m18/m19/m21
+    * entries share: docs with doc_id < 150 as (id, key = doc_id % 25,
+    * scale) — the second half at scale 2, so every key has a scale-1
+    * and a scale-2 rendition.
+    */
+  def mediaIds(docs: DataFrame): DataFrame =
+    docs.filter(col("doc_id") < 150)
+      .select(col("doc_id").cast("long").as("id"),
+        (col("doc_id") % 25).as("key"),
+        when(col("doc_id") < 75, 1).otherwise(2).as("scale"))
+
   /** Events table with its `ts` column surfaced as a microsecond
     * TimestampType regardless of how the parquet writer encoded it.
     * Generations of the testdata have shipped TIMESTAMP(NANOS) — which

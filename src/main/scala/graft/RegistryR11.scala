@@ -741,9 +741,8 @@ object RegistryR11 {
       (s, dir) => {
         val grp = t(s, dir, "customer")
           .groupBy("c_nationkey").agg(count(lit(1)).as("n"))
-        val u = (conv(substring(
-            md5(concat(lit("dp-eps1-"), col("c_nationkey").cast("string"))),
-            1, 15), 16, 10).cast("long").cast("double") + 0.5) /
+        val u = (graft.llm.CorpusPipeline.hashUniform("dp-eps1-",
+            col("c_nationkey")).cast("double") + 0.5) /
           lit(1152921504606846976L).cast("double") // 2^60: exact division
         val centered = u - 0.5
         // clamp keeps ln() finite if a hash ever lands on the open
@@ -787,46 +786,13 @@ object RegistryR11 {
     //      then trust the banded join those parameters drive.
     Q("d30_recall_portable",
       (s, dir) => {
-        import org.apache.spark.sql.expressions.Window
-        val toks = expr(
-          "filter(split(lower(trim(text)), '\\\\s+'), x -> length(x) > 0)")
-        val w = Window.partitionBy("doc_id").orderBy("pos")
-        // feeds signatures, the exact inverted-index join (twice) and
-        // sizes — plan-lifetime cache TRACKED in CacheScope.harness
-        // (released by the harness after the query)
+        // feeds the candidate pipeline, the exact inverted-index join
+        // (twice) and sizes — plan-lifetime cache TRACKED in
+        // CacheScope.harness (released by the harness after the query)
         val gramRows = graft.CacheScope.harness.track(
-          t(s, dir, "documents")
-          .filter(col("doc_id") < 1500)
-          .select(col("doc_id"), posexplode(toks).as(Seq("pos", "tok")))
-          .select(col("doc_id"), col("tok"),
-            lead("tok", 1).over(w).as("t1"),
-            lead("tok", 2).over(w).as("t2"))
-          .filter(col("t2").isNotNull)
-          .select(col("doc_id"),
-            concat_ws(" ", col("tok"), col("t1"), col("t2")).as("gram"))
-          .distinct())
-        val p = lit(2147483647L)
-        val sig = gramRows
-          .select(col("doc_id"),
-            (conv(substring(md5(col("gram")), 1, 8), 16, 10)
-              .cast("long") % p).as("g"))
-          .select(col("doc_id"), col("g"),
-            explode(sequence(lit(0), lit(31))).as("seed"))
-          .select(col("doc_id"), col("seed"),
-            (((lit(2654435761L) * (col("seed") + 1) % p) * col("g")
-              + lit(40503L) * (col("seed") + 1) % p) % p).as("h"))
-          .groupBy("doc_id", "seed").agg(min(col("h")).as("mh"))
-        val bands = sig
-          .groupBy(col("doc_id"), (col("seed") / 4).cast("int").as("band"))
-          .agg(array_join(transform(
-            sort_array(collect_list(struct(col("seed"), col("mh")))),
-            x => x.getField("mh").cast("string")), "-").as("sig"))
-        val cand = bands.alias("a")
-          .join(bands.alias("b"),
-            col("a.band") === col("b.band") && col("a.sig") === col("b.sig")
-              && col("a.doc_id") < col("b.doc_id"))
-          .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-          .distinct()
+          graft.llm.Dedup.docTrigrams(
+            t(s, dir, "documents").filter(col("doc_id") < 1500)))
+        val cand = graft.llm.Dedup.trigramLshCandidates(gramRows)
         val sizes = gramRows.groupBy("doc_id").agg(count(lit(1)).as("n"))
         val inter = gramRows.select(col("doc_id").as("id_a"), col("gram"))
           .join(gramRows.select(col("doc_id").as("id_b"), col("gram")),
@@ -914,32 +880,10 @@ object RegistryR11 {
     //      BEFORE normalization, so the z-sum is associative BIGINT —
     //      no cross-engine summation-order drift.
     Q("l13_temperature_sample",
-      (s, dir) => {
-        val docs = t(s, dir, "documents")
-        val counts = docs.groupBy("lang").agg(count(lit(1)).as("c"))
-        val tot = counts.agg(sum("c").as("total"))
-        val q = counts.crossJoin(broadcast(tot))
-          .withColumn("qs_micro",
-            round(pow(col("c").cast("double") /
-              col("total").cast("double"), 0.7) * 1e9).cast("long"))
-        val rates = q.crossJoin(broadcast(
-            q.agg(sum("qs_micro").as("z_micro"))))
-          .withColumn("rate_micro",
-            least(lit(1000000L),
-              round(lit(200.0) *
-                (col("qs_micro").cast("double") /
-                  col("z_micro").cast("double")) /
-                col("c").cast("double") * 1e6).cast("long")))
-          .select(col("lang"), col("rate_micro"))
-        docs.join(broadcast(rates), "lang")
-          .withColumn("u_micro",
-            conv(substring(md5(concat(lit("temp-"),
-              col("doc_id").cast("string"))), 1, 15), 16, 10)
-              .cast("long") % 1000000L)
-          .filter(col("u_micro") < col("rate_micro"))
-          .select(col("doc_id"), col("lang"), col("rate_micro"))
-          .orderBy("doc_id")
-      },
+      (s, dir) => graft.llm.CorpusPipeline.temperatureSample(
+          t(s, dir, "documents"), "lang", 200.0, "temp-")
+        .select(col("doc_id"), col("lang"), col("rate_micro"))
+        .orderBy("doc_id"),
       Some("""WITH c AS (
              |  SELECT lang, count(*) AS c FROM documents GROUP BY lang),
              |tot AS (SELECT sum(c) AS total FROM c),
@@ -1092,13 +1036,9 @@ object RegistryR11 {
         val ids = t(s, dir, "documents")
           .select(col("doc_id").cast("long").as("id"))
           .filter(col("id") < 300)
-        val env = graft.llm.Multimodal.audioWindowEnergy(
+        val feats = graft.llm.Multimodal.audioContentKeys(
           graft.llm.Multimodal.withSyntheticAudio(ids, "id", genMod = 64L),
-          "id", windows = 10)
-        val feats = env.groupBy("id")
-          .agg(md5(to_json(sort_array(
-            collect_list(struct(col("win"), col("energy"))))))
-            .as("content_key"))
+          "id")
         graft.llm.Dedup.pairsWithinGroups(feats, "content_key", "id")
           .orderBy("id_a", "id_b")
       },
@@ -1323,17 +1263,10 @@ object RegistryR11 {
         val B = 512
         val toks = expr(
           "filter(split(lower(trim(text)), '\\\\s+'), x -> length(x) > 0)")
-        // plant a PARTIAL class signal (a lang-marker token on even ids
-        // only) so the held-out verdicts genuinely vary: even docs are
-        // separable, odd docs fall back to the prior — the synthetic
-        // vocab itself is lang-independent.
-        val docs = t(s, dir, "documents").select(col("doc_id"),
-          (conv(substring(md5(concat(lit("t27:"), col("doc_id"))),
-            1, 15), 16, 10).cast("long") % 100 < 70).as("is_train"),
-          (col("lang") === "en").as("is_pos"),
-          concat(col("text"), when(col("doc_id") % 2 === 0,
-            concat(lit(" m"), col("lang"))).otherwise(lit("")))
-            .as("text"))
+        // the trained-filter split (its lang-marker plant makes the
+        // held-out verdicts genuinely vary)
+        val docs = graft.llm.LogReg.labeledSplit(
+          t(s, dir, "documents"), "t27:").docs
         val grams = docs
           .select(col("doc_id"), col("is_train"), col("is_pos"),
             explode(toks).as("tok"))
@@ -1452,10 +1385,7 @@ object RegistryR11 {
     //      gate. ----------------------------------------------------------
     Q("m14_image_dhash_dups",
       (s, dir) => {
-        val ids = t(s, dir, "documents").filter(col("doc_id") < 150)
-          .select(col("doc_id").cast("long").as("id"),
-            (col("doc_id") % 25).as("key"),
-            when(col("doc_id") < 75, 1).otherwise(2).as("scale"))
+        val ids = Registry.mediaIds(t(s, dir, "documents"))
         val imgs = graft.llm.Multimodal.withSyntheticImagesScaled(
           ids, "id", "key", "scale", baseW = 36, baseH = 32)
         val hashed = graft.llm.Multimodal.dhashes(imgs, "id")
@@ -1492,8 +1422,8 @@ object RegistryR11 {
             expr("CAST(m * 1000000 div n_cell AS BIGINT)").as("rate"))
         asg.join(broadcast(rt), Seq("cell"))
           .select(col("id"), col("cell"), col("n_cell"), col("rate"),
-            (conv(substring(md5(concat(lit("l15:"), col("id"))), 1, 15),
-              16, 10).cast("long") % 1000000L < col("rate"))
+            (graft.llm.CorpusPipeline.hashUniform("l15:", col("id")) %
+              1000000L < col("rate"))
               .cast("int").as("kept"))
           .orderBy("id")
       },
@@ -1641,39 +1571,16 @@ object RegistryR11 {
           .select(col("doc_id"), explode(gramsLower).as("g"))
           .join(broadcast(evalGrams), "g").select("doc_id").distinct()
         val q3 = train.join(contaminated, Seq("doc_id"), "left_anti")
-        val counts = q3.groupBy("lang").agg(count(lit(1)).as("c"))
-        val qq = counts.crossJoin(broadcast(counts.agg(sum("c").as("total"))))
-          .withColumn("qs_micro",
-            round(pow(col("c").cast("double") / col("total").cast("double"),
-              0.7) * 1e9).cast("long"))
-        val rates = qq.crossJoin(broadcast(
-            qq.agg(sum("qs_micro").as("z_micro"))))
-          .withColumn("rate_micro",
-            least(lit(1000000L),
-              round(lit(100.0) *
-                (col("qs_micro").cast("double") /
-                  col("z_micro").cast("double")) /
-                col("c").cast("double") * 1e6).cast("long")))
-          .select(col("lang"), col("rate_micro"))
-        val q4 = q3.join(broadcast(rates), "lang")
-          .filter(conv(substring(md5(concat(lit("l16-"),
-            col("doc_id").cast("string"))), 1, 15), 16, 10)
-            .cast("long") % 1000000L < col("rate_micro"))
-        def stage(name: String,
-                  df: org.apache.spark.sql.DataFrame)
-            : org.apache.spark.sql.DataFrame =
-          df.agg(count(lit(1)).as("n_rows"))
-            .select(lit(name).as("stage"), col("n_rows"))
-        stage("0_raw", docs)
-          .union(stage("1_quality", q1))
-          .union(stage("2_dedup", q2))
-          .union(stage("3_decontam", q3))
-          .union(stage("4_sampled", q4))
-          .union(q4.agg(
-              expr("CAST((sum(n_words) + 511) div 512 AS BIGINT)")
-                .as("n_rows"))
-            .select(lit("5_blocks").as("stage"), col("n_rows")))
-          .orderBy("stage")
+        val q4 = graft.llm.CorpusPipeline.temperatureSample(
+          q3, "lang", 100.0, "l16-")
+        graft.llm.CorpusPipeline.stageReport(
+          ("0_raw", docs, count(lit(1))),
+          ("1_quality", q1, count(lit(1))),
+          ("2_dedup", q2, count(lit(1))),
+          ("3_decontam", q3, count(lit(1))),
+          ("4_sampled", q4, count(lit(1))),
+          ("5_blocks", q4,
+            expr("CAST((sum(n_words) + 511) div 512 AS BIGINT)")))
       },
       Some("""WITH d AS (
              |  SELECT doc_id, lang,

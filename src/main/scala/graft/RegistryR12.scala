@@ -339,20 +339,9 @@ object RegistryR12 {
     //      flipped, a bin seam moved) breaks the gate. ---------------
     Q("l18_dedup_tokenize_pack",
       (s, dir) => {
-        val docs = t(s, dir, "documents").filter(col("doc_id") < 300)
-        val clean = graft.llm.Dedup
-          .exactSubstrDedup(docs, "text", "doc_id", w = 8,
-            floor = false) // clean feeds the iterative BPE fit
-          .select(col("id").as("doc_id"), col("clean_text").as("text"))
-        val merges = graft.llm.Bpe.fit(clean, "text", numMerges = 8,
-          maxVocabWords = 200)
-        val counts = graft.llm.Bpe
-          .encodePortable(clean, "doc_id", "text", merges)
-          .select(col("id").as("doc_id"),
-            col("n_bpe_tokens").cast("long").as("n_tokens"))
-        graft.llm.CorpusPipeline.packByCount(counts,
-            capacity = 512, blockSize = 32)
-          .select(col("doc_id"), col("block"),
+        val (_, packed) = graft.llm.CorpusPipeline.dedupTokenizePack(
+          t(s, dir, "documents").filter(col("doc_id") < 300))
+        packed.select(col("doc_id"), col("block"),
             col("bin").cast("long").as("bin"), col("n_tokens"))
           .orderBy("doc_id")
       },

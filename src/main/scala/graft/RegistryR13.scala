@@ -97,29 +97,11 @@ object RegistryR13 {
         // NB scored is consumed twice (sample chain + final join), but
         // caching it was MEASURED SLOWER (3.0 -> 3.9 s): the cache
         // barrier costs more than exchange-reuse recomputation
-        val scored = graft.llm.TextAnalysis.knTrigramScores(
+        val ta = graft.llm.TextAnalysis
+        ta.perplexityBuckets(ta.knTrigramScores(
             docs.filter(col("doc_id") < 400), docs, "doc_id", "text")
-          .join(docs.select(col("doc_id").as("id"), col("source")), "id")
-        val sample = graft.plans.TopKPerKey(
-            scored.filter(col("n_trigrams") > 0)
-              .select(col("source"), col("id"), col("avg_logp")),
-            keys = Seq(col("source")), order = Seq(col("id").asc), k = 100)
-        val ranked = sample
-          .withColumn("r", row_number().over(Window.partitionBy("source")
-            .orderBy(col("avg_logp").desc, col("id"))))
-          .withColumn("n",
-            count(lit(1)).over(Window.partitionBy("source")))
-        val th = ranked.filter(col("r") === expr("(n + 2) div 3"))
-          .select(col("source"), col("avg_logp").as("t1"))
-          .join(ranked.filter(col("r") === expr("(2 * n + 2) div 3"))
-            .select(col("source"), col("avg_logp").as("t2")), "source")
-        scored.join(broadcast(th), Seq("source"), "left")
-          .select(col("id").as("doc_id"), col("source"),
-            when(col("avg_logp").isNull, "unscored")
-              .when(col("avg_logp") >= col("t1"), "head")
-              .when(col("avg_logp") >= col("t2"), "middle")
-              .otherwise("tail").as("bucket"))
-          .orderBy("doc_id")
+          .join(docs.select(col("doc_id").as("id"), col("source")), "id"),
+          "n_trigrams")
       },
       Some {
         val ctes = graft.llm.TextAnalysis.knOracleCtes("documents",
@@ -241,27 +223,16 @@ object RegistryR13 {
     //      single entry. ---------------------------------------------
     Q("l19_full_prep_dag",
       (s, dir) => {
-        val docs = t(s, dir, "documents").filter(col("doc_id") < 300)
-        val clean = graft.llm.Dedup
-          .exactSubstrDedup(docs, "text", "doc_id", w = 8,
-            floor = false) // clean feeds the iterative BPE fit
-          .select(col("id").as("doc_id"), col("clean_text").as("text"))
-        val merges = graft.llm.Bpe.fit(clean, "text", numMerges = 8,
-          maxVocabWords = 200)
-        val counts = graft.llm.Bpe
-          .encodePortable(clean, "doc_id", "text", merges)
-          .select(col("id").as("doc_id"),
-            col("n_bpe_tokens").cast("long").as("n_tokens"))
-        val packed = graft.llm.CorpusPipeline.packByCount(counts,
-          capacity = 512, blockSize = 32)
+        val (clean, packed) = graft.llm.CorpusPipeline.dedupTokenizePack(
+          t(s, dir, "documents").filter(col("doc_id") < 300))
         val phase = clean.select(col("doc_id"),
           graft.llm.TextAnalysis.qualityPhase(col("text")).as("phase"))
         val binPhase = packed.join(phase, "doc_id")
           .groupBy("block", "bin")
           .agg(min(col("phase")).as("bin_phase"))
-          .withColumn("pri", expr(
-            "CAST(conv(substring(md5(concat(CAST(block AS STRING), " +
-              "':', CAST(bin AS STRING))), 1, 15), 16, 10) AS BIGINT)"))
+          .withColumn("pri", graft.llm.CorpusPipeline.hashUniform("",
+            concat(col("block").cast("string"), lit(":"),
+              col("bin").cast("string"))))
         packed.join(phase, "doc_id")
           .join(binPhase, Seq("block", "bin"))
           .select(col("doc_id"), col("block"),

@@ -77,98 +77,8 @@ object RegistryR14 {
         val docs = t(s, dir, "documents").filter(col("doc_id") < 300)
           .withColumn("text", when(col("doc_id") % 41 === 0, lit(dup))
             .otherwise(coalesce(col("text"), lit(""))))
-        val warcIn = docs.select(
-          col("doc_id"),
-          lit("conversion").as("warc_type"),
-          concat(lit("<urn:graft:doc:"), col("doc_id"), lit(">"))
-            .as("record_id"),
-          concat(lit("https://example.org/"), col("source"), lit("/"),
-            col("doc_id")).as("target_uri"),
-          lit("2026-01-01T00:00:00Z").as("warc_date"),
-          lit("text/plain").as("content_type"),
-          encode(col("text"), "UTF-8").as("payload"))
-        val tmp = Registry.scratchDir("warc_l22")
-        graft.sources.WarcIngest.writeWarcDir(
-          warcIn.repartition(4, col("doc_id")), tmp, gzip = true)
-        val (records, audit) = graft.sources.WarcIngest.readWarcDir(s, tmp)
-        require(audit.filter(col("corrupt")).count() == 0,
-          "l22: corrupt archives")
-        // persisted (harness scope): readWarcDir re-STREAMS the gzip
-        // archives on every action, and BOTH the stage-0 count and the
-        // c1 build hang off this frame — the pin bounds the chain to
-        // ONE container decode however many stages read it
-        val fromWarc = CacheScope.harness.track(records.select(
-          regexp_extract(col("record_id"), "doc:(\\d+)", 1)
-            .cast("long").as("doc_id"),
-          regexp_extract(col("target_uri"), "example\\.org/([^/]+)/", 1)
-            .as("source"),
-          decode(col("payload"), "UTF-8").as("text"))).toDF()
-        // C4-lite lines: 7-word chunks, keep chunks of >= 3 words, doc
-        // survives with >= 5 kept lines; ws binds ONCE per row (the
-        // one-element-transform trick)
-        // persisted (harness scope, released after the query drains):
-        // four stage aggregates hang off the CLEANED frame — the pin
-        // keeps the C4 transform single-pass on top of fromWarc's
-        // single container decode
-        val c1 = CacheScope.harness.track(
-          fromWarc.filter(col("text").rlike("\\S"))
-          .select(col("doc_id"), col("source"), expr(
-            """element_at(transform(
-              |  array(filter(split(trim(text), '\\s+'),
-              |        x -> length(x) > 0)),
-              |  ws -> filter(
-              |    transform(sequence(0,
-              |        cast(ceil(size(ws) / 7.0) as int) - 1),
-              |      i -> slice(ws, i * 7 + 1, 7)),
-              |    l -> size(l) >= 3)), 1)""".stripMargin).as("kept"))
-          .filter(size(col("kept")) >= 5)
-          .select(col("doc_id"), col("source"), expr(
-            "array_join(transform(kept, l -> array_join(l, ' ')), ' ')")
-            .as("ctext"))).toDF()
-        val dd = graft.llm.Dedup.exactSubstrDedup(c1, "ctext", "doc_id",
-          w = 8, floor = false) // c1 is a cached derived frame, not a scan
-        // dd derives from c1 (self-join lineage) — disambiguate by
-        // alias. Persisted: the ExactSubstr rewrite feeds the sampling
-        // stage, its count, AND the block fold — one rewrite, not three.
-        val surv = CacheScope.harness.track(
-          dd.as("dd").join(c1.as("c"),
-            col("dd.id") === col("c.doc_id"))
-          .select(col("c.doc_id").as("doc_id"),
-            col("c.source").as("source"),
-            (size(split(col("c.ctext"), " ")) -
-              col("dd.n_tokens_removed")).cast("long").as("nt"))
-          .filter(col("nt") > 0)).toDF()
-        val counts = surv.groupBy("source").agg(count(lit(1)).as("c"))
-        val qq = counts
-          .crossJoin(broadcast(counts.agg(sum("c").as("total"))))
-          .withColumn("qs_micro",
-            round(pow(col("c").cast("double") / col("total").cast("double"),
-              0.7) * 1e9).cast("long"))
-        val rates = qq.crossJoin(broadcast(
-            qq.agg(sum("qs_micro").as("z_micro"))))
-          .withColumn("rate_micro",
-            least(lit(1000000L),
-              round(lit(100.0) *
-                (col("qs_micro").cast("double") /
-                  col("z_micro").cast("double")) /
-                col("c").cast("double") * 1e6).cast("long")))
-          .select(col("source"), col("rate_micro"))
-        val q4 = surv.join(broadcast(rates), "source")
-          .filter(conv(substring(md5(concat(lit("l22-"),
-            col("doc_id").cast("string"))), 1, 15), 16, 10)
-            .cast("long") % 1000000L < col("rate_micro"))
-        def stage(name: String, df: org.apache.spark.sql.DataFrame)
-            : org.apache.spark.sql.DataFrame =
-          df.agg(count(lit(1)).as("n_rows"))
-            .select(lit(name).as("stage"), col("n_rows"))
-        stage("0_warc_records", fromWarc)
-          .union(stage("1_c4_clean", c1))
-          .union(stage("2_exact_substr", surv))
-          .union(stage("3_sampled", q4))
-          .union(q4.agg(
-              expr("CAST((sum(nt) + 511) div 512 AS BIGINT)").as("n_rows"))
-            .select(lit("4_blocks").as("stage"), col("n_rows")))
-          .orderBy("stage")
+        graft.llm.CorpusPipeline.commonCrawlChain(docs,
+          Registry.scratchDir("warc_l22"))
       },
       Some("""WITH d AS (
              |  SELECT doc_id, source,
@@ -281,10 +191,7 @@ object RegistryR14 {
     //      drift anywhere breaks the gate. ----------------------------
     Q("m17_canonical_image",
       (s, dir) => {
-        val ids = t(s, dir, "documents").filter(col("doc_id") < 150)
-          .select(col("doc_id").cast("long").as("id"),
-            (col("doc_id") % 25).as("key"),
-            when(col("doc_id") < 75, 1).otherwise(2).as("scale"))
+        val ids = Registry.mediaIds(t(s, dir, "documents"))
         val imgs = graft.llm.Multimodal.withSyntheticImagesScaled(
           ids, "id", "key", "scale", baseW = 36, baseH = 32)
         val hashed = graft.llm.Multimodal.dhashes(imgs, "id")

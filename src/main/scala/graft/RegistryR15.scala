@@ -86,25 +86,9 @@ object RegistryR15 {
     Q("t34_logreg_quality",
       (s, dir) => {
         val lr = graft.llm.LogReg
-        val docs = t(s, dir, "documents").select(col("doc_id"),
-          (conv(substring(md5(concat(lit("t34:"), col("doc_id"))),
-            1, 15), 16, 10).cast("long") % 100 < 70).as("is_train"),
-          (col("lang") === "en").as("is_pos"),
-          concat(col("text"), when(col("doc_id") % 2 === 0,
-            concat(lit(" m"), col("lang"))).otherwise(lit("")))
-            .as("text"))
-        val train = lr.hashedCounts(docs.filter(col("is_train")),
-          "doc_id", "is_pos", "text", buckets = 256)
-        val heldout = lr.hashedCounts(docs.filter(!col("is_train")),
-          "doc_id", "is_pos", "text", buckets = 256)
-        val w = lr.fit(train, iters = 10, lrDen = 4L)
-        lr.margins(heldout, w)
-          .select(col("id").as("doc_id"),
-            col("y").cast("int").as("label"),
-            col("m").as("score_micro"),
-            (col("m") > 0).cast("int").as("pred"),
-            ((col("m") > 0) === col("y")).cast("int").as("correct"))
-          .orderBy("doc_id")
+        val split = lr.labeledSplit(t(s, dir, "documents"), "t34:")
+        lr.verdicts(lr.margins(split.heldout,
+          lr.fit(split.train, iters = 10, lrDen = 4L)))
       },
       Some {
         val ctes = graft.llm.LogReg.oracleCtes(buckets = 256, iters = 10,
@@ -148,98 +132,14 @@ object RegistryR15 {
     //      token counts travel; payloads stay scan-side. --------------
     Q("m18_multimodal_chain",
       (s, dir) => {
-        val mm = graft.llm.Multimodal
         val docsAll = t(s, dir, "documents").filter(col("doc_id") < 150)
-        val ids = docsAll.select(col("doc_id").cast("long").as("id"),
-          (col("doc_id") % 25).as("key"),
-          when(col("doc_id") < 75, 1).otherwise(2).as("scale"))
-        val pristine = mm.withSyntheticImagesScaled(ids, "id", "key",
-          "scale", baseW = 36, baseH = 32)
+        val ids = Registry.mediaIds(docsAll)
         val gpsVals = docsAll.select(col("doc_id").cast("long").as("id"),
           format_string("lat=%d;lon=%d",
             col("doc_id") * 1003 % 180000000L - 90000000L,
             col("doc_id") * 2017 % 360000000L - 180000000L).as("gps_v"))
-        val planted = mm.withPlantedText(
-          pristine.join(gpsVals, "id"), "id", "payload",
-          Seq("gps" -> "gps_v"))
-        val tarIn = planted
-          .select(col("id"),
-            format_string("img/%05d.png", col("id")).as("name"),
-            col("payload"))
-          .unionByName(docsAll.select(col("doc_id").cast("long").as("id"),
-            format_string("img/%05d.txt", col("doc_id")).as("name"),
-            encode(coalesce(col("text"), lit("")), "UTF-8").as("payload")))
-        val tmp = Registry.scratchDir("m18_tar")
-        graft.sources.TarIngest.writeTarDir(
-          tarIn.repartition(4, col("id")).drop("id"), tmp, gzip = true)
-        val (members, audit) = graft.sources.TarIngest.readTarDir(s, tmp)
-        require(audit.filter(col("corrupt")).count() == 0,
-          "m18: corrupt shards")
-        // persisted (harness scope): the TAR re-streams per action and
-        // five stages hang off the sample frame — one container decode
-        val samples = CacheScope.harness.track(
-          graft.sources.TarIngest.wdsSamples(members)).toDF()
-        val pngs = samples.filter(col("ext") === "png")
-          .select(regexp_extract(col("sample_key"), "(\\d+)$", 1)
-            .cast("long").as("id"), col("payload"))
-        val caps = samples.filter(col("ext") === "txt")
-          .select(regexp_extract(col("sample_key"), "(\\d+)$", 1)
-            .cast("long").as("id"),
-            decode(col("payload"), "UTF-8").as("caption"))
-        val gpsSeen = mm.pngMeta(pngs, "id", "payload")
-          .filter(col("keyword") === "gps")
-          .join(gpsVals, "id")
-          .filter(col("value") === col("gps_v"))
-        // strip INSIDE the chain, on the container bytes; pinned — the
-        // dHash, the width decode and the restored-proof all read it
-        val stripped = CacheScope.harness.track(
-          mm.stripPngMeta(pngs, "id", "payload")
-            .select(col("id"), col("payload"))).toDF()
-        val restored = stripped
-          .select(col("id"), md5(col("payload")).as("m1"))
-          .join(mm.stripPngMeta(pristine, "id", "payload")
-            .select(col("id"), md5(col("payload")).as("m0")), "id")
-          .filter(col("m1") === col("m0"))
-        val hashed = mm.dhashes(stripped, "id")
-          .filter(col("dhash").isNotNull)
-        val cc = graft.llm.Dedup.connectedComponents(
-          hashed.select(col("id")),
-          graft.llm.Dedup.starEdges(hashed, "dhash", "id"))
-        val meta = mm.decodeImageFeatures(stripped, "id")
-          .select(col("id"), col("width").cast("long").as("width"))
-        // m17's rule through the map-side-combinable argmax election —
-        // never a rank window over the connected-components rep key
-        val canonical = graft.llm.Dedup.electCanonical(
-            cc.join(meta, "id"), "rep", "id", "width")
-          .select(col("rep"), col("canonical"))
-        val withCap = canonical
-          .join(caps, canonical("canonical") === caps("id"))
-        val counts = withCap.select(col("canonical").as("doc_id"),
-          (lit(64L) + graft.llm.TextAnalysis.tokenCount(col("caption")))
-            .as("n_tokens"))
-        val packed = graft.llm.CorpusPipeline.packByCount(counts,
-          capacity = 256, blockSize = 8)
-        def stage(name: String, df: org.apache.spark.sql.DataFrame)
-            : org.apache.spark.sql.DataFrame =
-          df.agg(count(lit(1)).as("n_rows"))
-            .select(lit(name).as("stage"), col("n_rows"))
-        // stage 0 counts the CACHED sample frame (one row per member —
-        // wdsSamples is a per-member annotation), not `members`, which
-        // would re-stream the archives for one count (the l22 lesson)
-        stage("0_tar_members", samples)
-          .union(samples.agg(countDistinct(col("sample_key"))
-              .as("n_rows"))
-            .select(lit("1_samples").as("stage"), col("n_rows")))
-          .union(stage("2_gps_seen", gpsSeen))
-          .union(stage("3_strip_restored", restored))
-          .union(stage("4_canonical", canonical))
-          .union(stage("5_caption_join", withCap))
-          .union(packed.agg(countDistinct(
-              col("block") * 10000L + col("bin")).as("n_rows"))
-            .select(lit("6_blocks").as("stage"), col("n_rows")))
-          .union(counts.agg(sum(col("n_tokens")).as("n_rows"))
-            .select(lit("7_tokens").as("stage"), col("n_rows")))
-          .orderBy("stage")
+        graft.llm.Multimodal.multimodalChain(docsAll, ids, gpsVals,
+          Registry.scratchDir("m18_tar"))
       },
       Some("""WITH RECURSIVE ids AS (
              |  SELECT doc_id AS id, doc_id % 25 AS key,
@@ -472,21 +372,11 @@ object RegistryR15 {
     Q("l26_trained_filter_chain",
       (s, dir) => {
         val lr = graft.llm.LogReg
-        val docs = t(s, dir, "documents").select(col("doc_id"),
-          (conv(substring(md5(concat(lit("l26:"), col("doc_id"))),
-            1, 15), 16, 10).cast("long") % 100 < 70).as("is_train"),
-          (col("lang") === "en").as("is_pos"),
-          concat(col("text"), when(col("doc_id") % 2 === 0,
-            concat(lit(" m"), col("lang"))).otherwise(lit("")))
-            .as("text"))
-        val train = lr.hashedCounts(docs.filter(col("is_train")),
-          "doc_id", "is_pos", "text", buckets = 256)
-        val rest = lr.hashedCounts(docs.filter(!col("is_train")),
-          "doc_id", "is_pos", "text", buckets = 256)
-        val w = lr.fit(train, iters = 10, lrDen = 4L)
-        val kept = lr.margins(rest, w).filter(col("m") > 0)
+        val split = lr.labeledSplit(t(s, dir, "documents"), "l26:")
+        val w = lr.fit(split.train, iters = 10, lrDen = 4L)
+        val kept = lr.margins(split.heldout, w).filter(col("m") > 0)
           .select(col("id").as("doc_id"))
-        val counts = kept.join(docs, "doc_id")
+        val counts = kept.join(split.docs, "doc_id")
           .select(col("doc_id"),
             graft.llm.TextAnalysis.tokenCount(col("text"))
               .as("n_tokens"))

@@ -30,28 +30,11 @@ object RegistryR16 {
     Q("t35_logreg_persisted",
       (s, dir) => {
         val lr = graft.llm.LogReg
-        val docs = t(s, dir, "documents").select(col("doc_id"),
-          (conv(substring(md5(concat(lit("t34:"), col("doc_id"))),
-            1, 15), 16, 10).cast("long") % 100 < 70).as("is_train"),
-          (col("lang") === "en").as("is_pos"),
-          concat(col("text"), when(col("doc_id") % 2 === 0,
-            concat(lit(" m"), col("lang"))).otherwise(lit("")))
-            .as("text"))
-        val train = lr.hashedCounts(docs.filter(col("is_train")),
-          "doc_id", "is_pos", "text", buckets = 256)
-        val heldout = lr.hashedCounts(docs.filter(!col("is_train")),
-          "doc_id", "is_pos", "text", buckets = 256)
+        val split = lr.labeledSplit(t(s, dir, "documents"), "t34:")
         val tmp = Registry.scratchDir("lr_t35")
-        lr.saveWeights(s, lr.fit(train, iters = 10, lrDen = 4L),
+        lr.saveWeights(s, lr.fit(split.train, iters = 10, lrDen = 4L),
           s"$tmp/w")
-        val w = lr.loadWeights(s, s"$tmp/w")
-        lr.margins(heldout, w)
-          .select(col("id").as("doc_id"),
-            col("y").cast("int").as("label"),
-            col("m").as("score_micro"),
-            (col("m") > 0).cast("int").as("pred"),
-            ((col("m") > 0) === col("y")).cast("int").as("correct"))
-          .orderBy("doc_id")
+        lr.verdicts(lr.margins(split.heldout, lr.loadWeights(s, s"$tmp/w")))
       },
       Some {
         val ctes = graft.llm.LogReg.oracleCtes(buckets = 256, iters = 10,
@@ -98,96 +81,10 @@ object RegistryR16 {
     //      samples stay scan-side. -----------------------------------
     Q("m19_av_chain",
       (s, dir) => {
-        val mm = graft.llm.Multimodal
         val docsAll = t(s, dir, "documents").filter(col("doc_id") < 150)
-        val ids = docsAll.select(col("doc_id").cast("long").as("id"),
-          (col("doc_id") % 25).as("key"),
-          when(col("doc_id") < 75, 1).otherwise(2).as("scale"))
-        val wavs = mm.withSyntheticAudioScaled(ids, "id", "key", "scale",
-          baseSamples = 1000, rate = 8000)
-        val avis = mm.withSyntheticVideos(ids, "id", frames = 6)
-        val tarIn = wavs.select(col("id"),
-            format_string("av/%05d.wav", col("id")).as("name"),
-            col("payload"))
-          .unionByName(avis.select(col("id"),
-            format_string("av/%05d.avi", col("id")).as("name"),
-            col("payload")))
-          .unionByName(docsAll.select(
-            col("doc_id").cast("long").as("id"),
-            format_string("av/%05d.txt", col("doc_id")).as("name"),
-            encode(coalesce(col("text"), lit("")), "UTF-8").as("payload")))
-        val tmp = Registry.scratchDir("m19_tar")
-        graft.sources.TarIngest.writeTarDir(
-          tarIn.repartition(4, col("id")).drop("id"), tmp, gzip = true)
-        val (members, audit) = graft.sources.TarIngest.readTarDir(s, tmp)
-        require(audit.filter(col("corrupt")).count() == 0,
-          "m19: corrupt shards")
-        // persisted (harness scope): the TAR re-streams per action and
-        // six stages hang off the sample frame — one container decode
-        val samples = CacheScope.harness.track(
-          graft.sources.TarIngest.wdsSamples(members)).toDF()
-        def byExt(e: String) = samples.filter(col("ext") === e)
-          .select(regexp_extract(col("sample_key"), "(\\d+)$", 1)
-            .cast("long").as("id"), col("payload"))
-        val wavsIn = byExt("wav")
-        val avisIn = byExt("avi")
-        val caps = samples.filter(col("ext") === "txt")
-          .select(regexp_extract(col("sample_key"), "(\\d+)$", 1)
-            .cast("long").as("id"),
-            decode(col("payload"), "UTF-8").as("caption"))
-        // container round trip proven lossless on the audio bytes
-        val restored = wavsIn
-          .select(col("id"), md5(col("payload")).as("m1"))
-          .join(wavs.select(col("id"), md5(col("payload")).as("m0")),
-            "id")
-          .filter(col("m1") === col("m0"))
-        // ONE audio decode feeds dedup key, duration and the count
-        val env = CacheScope.harness.track(
-          mm.audioEnvelopes(wavsIn, "id", windows = 10)).toDF()
-        val cc = graft.llm.Dedup.connectedComponents(
-          env.select(col("id")),
-          graft.llm.Dedup.starEdges(
-            env.select(col("id"),
-              md5(to_json(col("envelope"))).as("akey")), "akey", "id"))
-        val canonical = graft.llm.Dedup.electCanonical(
-          cc.join(env.select(col("id"), col("num_samples")), "id"),
-          "rep", "id", "num_samples")
-        // video features: the real AVI walk, m11's scene-cut rule
-        import org.apache.spark.sql.expressions.Window
-        val w = Window.partitionBy("id").orderBy("frame_idx")
-        val cuts = mm.decodeVideoFrames(avisIn, "id")
-          .withColumn("prev", lag(col("sum_gray"), 1).over(w))
-          .filter(col("prev").isNotNull &&
-            abs(col("sum_gray") - col("prev")) > 300)
-        val withCap = canonical
-          .join(caps, canonical("canonical") === caps("id"))
-        val counts = withCap.select(col("canonical").as("doc_id"),
-          (lit(128L) + graft.llm.TextAnalysis.tokenCount(col("caption")))
-            .as("n_tokens"))
-        val packed = graft.llm.CorpusPipeline.packByCount(counts,
-          capacity = 384, blockSize = 8)
-        def stage(name: String, df: org.apache.spark.sql.DataFrame)
-            : org.apache.spark.sql.DataFrame =
-          df.agg(count(lit(1)).as("n_rows"))
-            .select(lit(name).as("stage"), col("n_rows"))
-        stage("0_tar_members", samples)
-          .union(samples.agg(countDistinct(col("sample_key"))
-              .as("n_rows"))
-            .select(lit("1_samples").as("stage"), col("n_rows")))
-          .union(stage("2_wav_restored", restored))
-          .union(stage("3_audio_envelopes", env))
-          .union(stage("4_scene_cuts", cuts))
-          .union(cc.agg(countDistinct(col("rep")).as("n_rows"))
-            .select(lit("5_clusters").as("stage"), col("n_rows")))
-          .union(canonical.agg(sum(col("canonical")).as("n_rows"))
-            .select(lit("6_canonical_idsum").as("stage"), col("n_rows")))
-          .union(stage("7_caption_join", withCap))
-          .union(packed.agg(countDistinct(
-              col("block") * 10000L + col("bin")).as("n_rows"))
-            .select(lit("8_blocks").as("stage"), col("n_rows")))
-          .union(counts.agg(sum(col("n_tokens")).as("n_rows"))
-            .select(lit("9_tokens").as("stage"), col("n_rows")))
-          .orderBy("stage")
+        val ids = Registry.mediaIds(docsAll)
+        graft.llm.Multimodal.avChain(docsAll, ids,
+          Registry.scratchDir("m19_tar"))
       },
       Some("""WITH RECURSIVE ids AS (
              |  SELECT doc_id AS id, doc_id % 25 AS key,
@@ -289,16 +186,7 @@ object RegistryR16 {
             when(col("doc_id") % 10 === 0, lit(0L))
               .otherwise(col("doc_id") % 97 + 1L).as("key"),
             lit(1).as("scale"))
-        val wavs = graft.llm.Multimodal.withSyntheticAudioScaled(
-          keyed, "id", "key", "scale", baseSamples = 200, rate = 8000)
-        val env = graft.llm.Multimodal.audioWindowEnergy(wavs, "id",
-          windows = 10)
-        val feats = env.groupBy("id")
-          .agg(md5(to_json(sort_array(
-            collect_list(struct(col("win"), col("energy"))))))
-            .as("content_key"))
-        graft.llm.Dedup.pairsWithinGroups(feats, "content_key", "id",
-            maxGroupSize = 8)
+        graft.llm.Multimodal.audioPairs(keyed, maxGroupSize = 8)
           .orderBy("id_a", "id_b")
       },
       Some("""WITH k AS (
@@ -431,18 +319,9 @@ object RegistryR16 {
     Q("t36_filter_calibration",
       (s, dir) => {
         val lr = graft.llm.LogReg
-        val docs = t(s, dir, "documents").select(col("doc_id"),
-          (conv(substring(md5(concat(lit("t34:"), col("doc_id"))),
-            1, 15), 16, 10).cast("long") % 100 < 70).as("is_train"),
-          (col("lang") === "en").as("is_pos"),
-          concat(col("text"), when(col("doc_id") % 2 === 0,
-            concat(lit(" m"), col("lang"))).otherwise(lit("")))
-            .as("text"))
-        val train = lr.hashedCounts(docs.filter(col("is_train")),
-          "doc_id", "is_pos", "text", buckets = 256)
-        val heldout = lr.hashedCounts(docs.filter(!col("is_train")),
-          "doc_id", "is_pos", "text", buckets = 256)
-        val sc = lr.margins(heldout, lr.fit(train, iters = 10, lrDen = 4L))
+        val split = lr.labeledSplit(t(s, dir, "documents"), "t34:")
+        val sc = lr.margins(split.heldout,
+          lr.fit(split.train, iters = 10, lrDen = 4L))
         lr.calibrationSweep(sc).orderBy("thr_micro")
       },
       Some {
@@ -496,18 +375,9 @@ object RegistryR16 {
     Q("t37_operating_point",
       (s, dir) => {
         val lr = graft.llm.LogReg
-        val docs = t(s, dir, "documents").select(col("doc_id"),
-          (conv(substring(md5(concat(lit("t34:"), col("doc_id"))),
-            1, 15), 16, 10).cast("long") % 100 < 70).as("is_train"),
-          (col("lang") === "en").as("is_pos"),
-          concat(col("text"), when(col("doc_id") % 2 === 0,
-            concat(lit(" m"), col("lang"))).otherwise(lit("")))
-            .as("text"))
-        val train = lr.hashedCounts(docs.filter(col("is_train")),
-          "doc_id", "is_pos", "text", buckets = 256)
-        val heldout = lr.hashedCounts(docs.filter(!col("is_train")),
-          "doc_id", "is_pos", "text", buckets = 256)
-        val sc = lr.margins(heldout, lr.fit(train, iters = 10, lrDen = 4L))
+        val split = lr.labeledSplit(t(s, dir, "documents"), "t34:")
+        val sc = lr.margins(split.heldout,
+          lr.fit(split.train, iters = 10, lrDen = 4L))
         lr.operatingPoint(lr.calibrationSweep(sc))
       },
       Some {
@@ -569,10 +439,7 @@ object RegistryR16 {
     Q("m21_media_decontaminate",
       (s, dir) => {
         val mm = graft.llm.Multimodal
-        val corpus = t(s, dir, "documents").filter(col("doc_id") < 150)
-          .select(col("doc_id").cast("long").as("id"),
-            (col("doc_id") % 25).as("key"),
-            when(col("doc_id") < 75, 1).otherwise(2).as("scale"))
+        val corpus = Registry.mediaIds(t(s, dir, "documents"))
         val eval0 = t(s, dir, "documents")
           .filter(col("doc_id") >= 315 && col("doc_id") < 325)
           .select(col("doc_id").cast("long").as("id"),

@@ -972,54 +972,13 @@ object RegistryR6 {
     //      just row-counted ---------------------------------------------
     Q("d20_minhash_portable",
       (s, dir) => {
-        import org.apache.spark.sql.expressions.Window
-        // Shingles via posexplode + window lead — every expression in
-        // the hot path is whole-stage-codegen'd. (A transform/element_at
-        // lambda formulation of the same trigrams ran ~10x slower here:
-        // higher-order functions evaluate interpreted, and under a
-        // Generate they dominate the runtime.) Short docs (<3 tokens)
-        // yield no shingle and so can never pair — same as the oracle.
-        val toks = expr(
-          "filter(split(lower(trim(text)), '\\\\s+'), x -> length(x) > 0)")
-        val w = Window.partitionBy("doc_id").orderBy("pos")
-        // referenced by signature, intersection (twice) and sizes —
-        // plan-lifetime cache TRACKED in CacheScope.harness (released by
-        // the harness after the query; embedders release it themselves)
+        // referenced by the candidate pipeline, intersection (twice)
+        // and sizes — plan-lifetime cache TRACKED in CacheScope.harness
+        // (released by the harness after the query)
         val gramRows = graft.CacheScope.harness.track(
-          t(s, dir, "documents")
-          .filter(col("doc_id") < 2000)
-          .select(col("doc_id"), posexplode(toks).as(Seq("pos", "tok")))
-          .select(col("doc_id"), col("tok"),
-            lead("tok", 1).over(w).as("t1"),
-            lead("tok", 2).over(w).as("t2"))
-          .filter(col("t2").isNotNull)
-          .select(col("doc_id"),
-            concat_ws(" ", col("tok"), col("t1"), col("t2")).as("gram"))
-          .distinct())
-        // ONE md5 per distinct (doc, gram); the 32 seed hashes are pure
-        // 64-bit integer arithmetic from the universal family.
-        val p = lit(2147483647L)
-        val sig = gramRows
-          .select(col("doc_id"),
-            (conv(substring(md5(col("gram")), 1, 8), 16, 10)
-              .cast("long") % p).as("g"))
-          .select(col("doc_id"), col("g"),
-            explode(sequence(lit(0), lit(31))).as("seed"))
-          .select(col("doc_id"), col("seed"),
-            (((lit(2654435761L) * (col("seed") + 1) % p) * col("g")
-              + lit(40503L) * (col("seed") + 1) % p) % p).as("h"))
-          .groupBy("doc_id", "seed").agg(min(col("h")).as("mh"))
-        val bands = sig
-          .groupBy(col("doc_id"), (col("seed") / 4).cast("int").as("band"))
-          .agg(array_join(transform(
-            sort_array(collect_list(struct(col("seed"), col("mh")))),
-            x => x.getField("mh").cast("string")), "-").as("sig"))
-        val cand = bands.alias("a")
-          .join(bands.alias("b"),
-            col("a.band") === col("b.band") && col("a.sig") === col("b.sig")
-              && col("a.doc_id") < col("b.doc_id"))
-          .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-          .distinct()
+          graft.llm.Dedup.docTrigrams(
+            t(s, dir, "documents").filter(col("doc_id") < 2000)))
+        val cand = graft.llm.Dedup.trigramLshCandidates(gramRows)
         // Exact verify on candidates only: |A∩B| by gram equi-join,
         // |A∪B| = |A| + |B| - |A∩B| — integer counting end to end.
         val sizes = gramRows.groupBy("doc_id")

@@ -1427,29 +1427,10 @@ object RegistryR8 {
         // caching it was MEASURED SLOWER (2.2 -> 3.0 s): the cache
         // barrier costs more than exchange-reuse recomputation of the
         // post-shuffle aggregates
-        val scored = graft.llm.TextAnalysis.bigramLmScores(
-            docs, "doc_id", "text")
-          .join(docs.select(col("doc_id").as("id"), col("source")), "id")
-        val sample = graft.plans.TopKPerKey(
-            scored.filter(col("n_bigrams") > 0)
-              .select(col("source"), col("id"), col("avg_logp")),
-            keys = Seq(col("source")), order = Seq(col("id").asc), k = 100)
-        val ranked = sample
-          .withColumn("r", row_number().over(Window.partitionBy("source")
-            .orderBy(col("avg_logp").desc, col("id"))))
-          .withColumn("n",
-            count(lit(1)).over(Window.partitionBy("source")))
-        val th = ranked.filter(col("r") === expr("(n + 2) div 3"))
-          .select(col("source"), col("avg_logp").as("t1"))
-          .join(ranked.filter(col("r") === expr("(2 * n + 2) div 3"))
-            .select(col("source"), col("avg_logp").as("t2")), "source")
-        scored.join(broadcast(th), Seq("source"), "left")
-          .select(col("id").as("doc_id"), col("source"),
-            when(col("avg_logp").isNull, "unscored")
-              .when(col("avg_logp") >= col("t1"), "head")
-              .when(col("avg_logp") >= col("t2"), "middle")
-              .otherwise("tail").as("bucket"))
-          .orderBy("doc_id")
+        val ta = graft.llm.TextAnalysis
+        ta.perplexityBuckets(ta.bigramLmScores(docs, "doc_id", "text")
+          .join(docs.select(col("doc_id").as("id"), col("source")), "id"),
+          "n_bigrams")
       },
       Some("""WITH toks AS (
              |  SELECT doc_id AS id, list_filter(

@@ -25,55 +25,13 @@ object ScaleProbe {
   private def docs(s: SparkSession, dir: String): DataFrame =
     s.read.parquet(s"$dir/documents.parquet")
 
-  private def eventsTable(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
-    val df = s.read.parquet(s"$dir/events.parquet")
-    df.schema("ts").dataType match {
-      case LongType => df.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      case TimestampNTZType => df.withColumn("ts", col("ts").cast(TimestampType))
-      case _ => df
-    }
-  }
-
-  /** The d20-shape portable LSH candidate pipeline (signatures + bands +
-    * bucket self-join), on a constant FRACTION of the corpus.
+  /** Media-chain plant over the whole corpus: 1000 content keys, half
+    * the corpus at scale 2 (pixel-doubled / 2x-upsampled renditions).
     */
-  private def lshCandidates(s: SparkSession, dir: String): DataFrame = {
-    val d = docs(s, dir)
-    val maxId = 2L * d.count() / 5L // 40% — d20's fraction at sf0.1
-    val toks = expr(
-      "filter(split(lower(trim(text)), '\\\\s+'), x -> length(x) > 0)")
-    val w = Window.partitionBy("doc_id").orderBy("pos")
-    val gramRows = d.filter(col("doc_id") < maxId)
-      .select(col("doc_id"), posexplode(toks).as(Seq("pos", "tok")))
-      .select(col("doc_id"), col("tok"),
-        lead("tok", 1).over(w).as("t1"), lead("tok", 2).over(w).as("t2"))
-      .filter(col("t2").isNotNull)
-      .select(col("doc_id"),
-        concat_ws(" ", col("tok"), col("t1"), col("t2")).as("gram"))
-      .distinct()
-    val p = lit(2147483647L)
-    val sig = gramRows
-      .select(col("doc_id"),
-        (conv(substring(md5(col("gram")), 1, 8), 16, 10)
-          .cast("long") % p).as("g"))
-      .select(col("doc_id"), col("g"),
-        explode(sequence(lit(0), lit(31))).as("seed"))
-      .select(col("doc_id"), col("seed"),
-        (((lit(2654435761L) * (col("seed") + 1) % p) * col("g")
-          + lit(40503L) * (col("seed") + 1) % p) % p).as("h"))
-      .groupBy("doc_id", "seed").agg(min(col("h")).as("mh"))
-    val bands = sig
-      .groupBy(col("doc_id"), (col("seed") / 4).cast("int").as("band"))
-      .agg(array_join(transform(
-        sort_array(collect_list(struct(col("seed"), col("mh")))),
-        x => x.getField("mh").cast("string")), "-").as("sig"))
-    bands.alias("a").join(bands.alias("b"),
-        col("a.band") === col("b.band") && col("a.sig") === col("b.sig")
-          && col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-      .distinct()
-  }
+  private def mediaPlant(d: DataFrame): DataFrame =
+    d.select(col("doc_id").cast("long").as("id"),
+      (col("doc_id") % 1000).as("key"),
+      (col("doc_id") % 2 + 1).cast("int").as("scale"))
 
   def probes: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
     // d26 shape: stride-1 window fingerprints over the FULL corpus
@@ -85,7 +43,7 @@ object ScaleProbe {
     // g03 shape: degree-oriented wedge join over the FULL event stream
     "g03_triangles" -> ((s, dir) => {
       val w = Window.partitionBy("event_type").orderBy(col("ts"), col("event_id"))
-      val edges = eventsTable(s, dir)
+      val edges = Registry.events(s, dir)
         .select(col("user_id").as("src"),
           lead(col("user_id"), 1).over(w).as("dst"))
         .filter(col("dst").isNotNull)
@@ -103,7 +61,11 @@ object ScaleProbe {
     }),
     // d20 shape: portable MinHash signatures -> banded bucket join on a
     // constant 40% fraction (d20's own fraction at sf0.1)
-    "d20_lsh_candidates" -> ((s, dir) => lshCandidates(s, dir)),
+    "d20_lsh_candidates" -> ((s, dir) => {
+      val d = docs(s, dir)
+      graft.llm.Dedup.trigramLshCandidates(graft.llm.Dedup.docTrigrams(
+        d.filter(col("doc_id") < 2L * d.count() / 5L)))
+    }),
     // d06/d08 df-cap VALVE measurement (round-12 probe finding: under
     // the fixed synthetic vocabulary, candidates-per-gram grow linearly
     // with corpus size, so the pair join goes quadratic at the next 10x
@@ -202,234 +164,39 @@ object ScaleProbe {
       graft.llm.UnigramLm.encode(d, "doc_id", "text", vocab,
         graft.llm.UnigramLm.Params())
     }),
-    // l22 shape (round-15): the COMPOSED CommonCrawl chain, unbounded —
-    // stages are probed individually (d31 above, l07/l13 shapes), but
-    // the chain is the product and its composed exponent was unmeasured:
-    // full corpus → executor-written gzip WARC archives → container
-    // read-back → C4-lite line cleaning → ExactSubstr-FULL → temperature
-    // mix → 512-token block count, one probe row (wall + shuffle).
-    "l22_chain" -> ((s, dir) => {
-      val d = docs(s, dir)
-      val warcIn = d.select(
-        col("doc_id"),
-        lit("conversion").as("warc_type"),
-        concat(lit("<urn:graft:doc:"), col("doc_id"), lit(">"))
-          .as("record_id"),
-        concat(lit("https://example.org/"), col("source"), lit("/"),
-          col("doc_id")).as("target_uri"),
-        lit("2026-01-01T00:00:00Z").as("warc_date"),
-        lit("text/plain").as("content_type"),
-        encode(coalesce(col("text"), lit("")), "UTF-8").as("payload"))
-      val tmp = graft.Registry.scratchDir("probe_l22_warc")
-      graft.sources.WarcIngest.writeWarcDir(
-        warcIn.repartition(32, col("doc_id")), tmp, gzip = true)
-      val (records, _) = graft.sources.WarcIngest.readWarcDir(s, tmp)
-      val fromWarc = graft.CacheScope.harness.track(records.select(
-        regexp_extract(col("record_id"), "doc:(\\d+)", 1)
-          .cast("long").as("doc_id"),
-        regexp_extract(col("target_uri"), "example\\.org/([^/]+)/", 1)
-          .as("source"),
-        decode(col("payload"), "UTF-8").as("text"))).toDF()
-      val c1 = graft.CacheScope.harness.track(
-        fromWarc.filter(col("text").rlike("\\S"))
-          .select(col("doc_id"), col("source"), expr(
-            """element_at(transform(
-              |  array(filter(split(trim(text), '\\s+'),
-              |        x -> length(x) > 0)),
-              |  ws -> filter(
-              |    transform(sequence(0,
-              |        cast(ceil(size(ws) / 7.0) as int) - 1),
-              |      i -> slice(ws, i * 7 + 1, 7)),
-              |    l -> size(l) >= 3)), 1)""".stripMargin).as("kept"))
-          .filter(size(col("kept")) >= 5)
-          .select(col("doc_id"), col("source"), expr(
-            "array_join(transform(kept, l -> array_join(l, ' ')), ' ')")
-            .as("ctext"))).toDF()
-      val dd = graft.llm.Dedup.exactSubstrDedup(c1, "ctext", "doc_id",
-        w = 8)
-      val surv = graft.CacheScope.harness.track(
-        dd.as("dd").join(c1.as("c"), col("dd.id") === col("c.doc_id"))
-          .select(col("c.doc_id").as("doc_id"),
-            col("c.source").as("source"),
-            (size(split(col("c.ctext"), " ")) -
-              col("dd.n_tokens_removed")).cast("long").as("nt"))
-          .filter(col("nt") > 0)).toDF()
-      val counts = surv.groupBy("source").agg(count(lit(1)).as("c"))
-      val qq = counts
-        .crossJoin(broadcast(counts.agg(sum("c").as("total"))))
-        .withColumn("qs_micro",
-          round(pow(col("c").cast("double") / col("total").cast("double"),
-            0.7) * 1e9).cast("long"))
-      val rates = qq.crossJoin(broadcast(
-          qq.agg(sum("qs_micro").as("z_micro"))))
-        .withColumn("rate_micro",
-          least(lit(1000000L),
-            round(lit(100.0) *
-              (col("qs_micro").cast("double") /
-                col("z_micro").cast("double")) /
-              col("c").cast("double") * 1e6).cast("long")))
-        .select(col("source"), col("rate_micro"))
-      val q4 = surv.join(broadcast(rates), "source")
-        .filter(conv(substring(md5(concat(lit("l22-"),
-          col("doc_id").cast("string"))), 1, 15), 16, 10)
-          .cast("long") % 1000000L < col("rate_micro"))
-      q4.agg(
-        count(lit(1)).as("n_sampled"),
-        expr("CAST((sum(nt) + 511) div 512 AS BIGINT)").as("n_blocks"))
-    }),
-    // m18 shape (round-15): the COMPOSED multimodal chain, unbounded —
-    // synthetic cross-scale image corpus (1000 perceptual clusters,
-    // half the corpus pixel-doubled) + captions through the TAR
-    // container, metadata strip, dHash, star-edge connected
-    // components, canonical election by decoded width, caption join,
-    // interleaved packing. The claim measured: pixels never shuffle
-    // (payloads stay scan-side; hashes/widths/token counts travel), so
-    // the chain's shuffle tracks members, not bytes, and CC rounds
-    // stay bounded under 10x more clusters.
+    // The COMPOSED chains, unbounded: each runs the registry entry's
+    // own chain body (l22 / m18 / m19) on the whole corpus, so the
+    // composed exponent is measured on the code the registry ships —
+    // one probe row per chain (wall + shuffle). The claim for the
+    // media chains: payloads never shuffle (hashes, widths, envelopes
+    // and token counts travel), so shuffle tracks members, not bytes,
+    // and CC rounds stay bounded under 10x more clusters.
+    "l22_chain" -> ((s, dir) =>
+      graft.llm.CorpusPipeline.commonCrawlChain(
+        docs(s, dir).withColumn("text", coalesce(col("text"), lit(""))),
+        Registry.scratchDir("probe_l22_warc"))),
     "m18_chain" -> ((s, dir) => {
-      val mm = graft.llm.Multimodal
       val d = docs(s, dir)
-      val ids = d.select(col("doc_id").cast("long").as("id"),
-        (col("doc_id") % 1000).as("key"),
-        (col("doc_id") % 2 + 1).cast("int").as("scale"))
-      val pristine = mm.withSyntheticImagesScaled(ids, "id", "key",
-        "scale", baseW = 36, baseH = 32)
-      val planted = mm.withPlantedText(
-        pristine.join(d.select(col("doc_id").cast("long").as("id"),
-          concat(lit("gps-"), col("doc_id")).as("gps_v")), "id"),
-        "id", "payload", Seq("gps" -> "gps_v"))
-      val tarIn = planted
-        .select(col("id"),
-          format_string("img/%07d.png", col("id")).as("name"),
-          col("payload"))
-        .unionByName(d.select(col("doc_id").cast("long").as("id"),
-          format_string("img/%07d.txt", col("doc_id")).as("name"),
-          encode(coalesce(col("text"), lit("")), "UTF-8").as("payload")))
-      val tmp = graft.Registry.scratchDir("probe_m18_tar")
-      graft.sources.TarIngest.writeTarDir(
-        tarIn.repartition(32, col("id")).drop("id"), tmp, gzip = true)
-      val (members, _) = graft.sources.TarIngest.readTarDir(s, tmp)
-      val samples = graft.CacheScope.harness.track(
-        graft.sources.TarIngest.wdsSamples(members)).toDF()
-      val pngs = samples.filter(col("ext") === "png")
-        .select(regexp_extract(col("sample_key"), "(\\d+)$", 1)
-          .cast("long").as("id"), col("payload"))
-      val caps = samples.filter(col("ext") === "txt")
-        .select(regexp_extract(col("sample_key"), "(\\d+)$", 1)
-          .cast("long").as("id"),
-          decode(col("payload"), "UTF-8").as("caption"))
-      val stripped = graft.CacheScope.harness.track(
-        mm.stripPngMeta(pngs, "id", "payload")
-          .select(col("id"), col("payload"))).toDF()
-      val hashed = mm.dhashes(stripped, "id")
-        .filter(col("dhash").isNotNull)
-      val cc = graft.llm.Dedup.connectedComponents(
-        hashed.select(col("id")),
-        graft.llm.Dedup.starEdges(hashed, "dhash", "id"))
-      val meta = mm.decodeImageFeatures(stripped, "id")
-        .select(col("id"), col("width").cast("long").as("width"))
-      val canonical = graft.llm.Dedup.electCanonical(
-          cc.join(meta, "id"), "rep", "id", "width")
-        .select(col("rep"), col("canonical"))
-      val counts = canonical
-        .join(caps, canonical("canonical") === caps("id"))
-        .select(col("canonical").as("doc_id"),
-          (lit(64L) + graft.llm.TextAnalysis.tokenCount(col("caption")))
-            .as("n_tokens"))
-      graft.llm.CorpusPipeline.packByCount(counts,
-          capacity = 256, blockSize = 64)
-        .agg(count(lit(1)).as("n_canonical"),
-          countDistinct(col("block") * 100000L + col("bin"))
-            .as("n_blocks"))
+      graft.llm.Multimodal.multimodalChain(d, mediaPlant(d),
+        d.select(col("doc_id").cast("long").as("id"),
+          concat(lit("gps-"), col("doc_id")).as("gps_v")),
+        Registry.scratchDir("probe_m18_tar"))
     }),
-    // m19 shape (round-16): the COMPOSED audio/video chain, unbounded —
-    // cross-duration WAV corpus (1000 envelope clusters, half
-    // integer-upsampled 2x) + MJPEG AVIs + captions through the TAR
-    // container, RIFF decode to the duration-invariant envelope,
-    // star-edge CC, longest-rendition argmax election, scene-cut walk,
-    // caption join, packing. Claim measured: samples/pixels never
-    // shuffle — envelopes, durations and token counts travel — so the
-    // chain's shuffle tracks members, not media bytes.
     "m19_chain" -> ((s, dir) => {
-      val mm = graft.llm.Multimodal
       val d = docs(s, dir)
-      val ids = d.select(col("doc_id").cast("long").as("id"),
-        (col("doc_id") % 1000).as("key"),
-        (col("doc_id") % 2 + 1).cast("int").as("scale"))
-      val wavs = mm.withSyntheticAudioScaled(ids, "id", "key", "scale",
-        baseSamples = 1000, rate = 8000)
-      val avis = mm.withSyntheticVideos(ids, "id", frames = 6)
-      val tarIn = wavs.select(col("id"),
-          format_string("av/%07d.wav", col("id")).as("name"),
-          col("payload"))
-        .unionByName(avis.select(col("id"),
-          format_string("av/%07d.avi", col("id")).as("name"),
-          col("payload")))
-        .unionByName(d.select(col("doc_id").cast("long").as("id"),
-          format_string("av/%07d.txt", col("doc_id")).as("name"),
-          encode(coalesce(col("text"), lit("")), "UTF-8").as("payload")))
-      val tmp = graft.Registry.scratchDir("probe_m19_tar")
-      graft.sources.TarIngest.writeTarDir(
-        tarIn.repartition(32, col("id")).drop("id"), tmp, gzip = true)
-      val (members, _) = graft.sources.TarIngest.readTarDir(s, tmp)
-      val samples = graft.CacheScope.harness.track(
-        graft.sources.TarIngest.wdsSamples(members)).toDF()
-      def byExt(e: String) = samples.filter(col("ext") === e)
-        .select(regexp_extract(col("sample_key"), "(\\d+)$", 1)
-          .cast("long").as("id"), col("payload"))
-      val caps = samples.filter(col("ext") === "txt")
-        .select(regexp_extract(col("sample_key"), "(\\d+)$", 1)
-          .cast("long").as("id"),
-          decode(col("payload"), "UTF-8").as("caption"))
-      val env = graft.CacheScope.harness.track(
-        mm.audioEnvelopes(byExt("wav"), "id", windows = 10)).toDF()
-      val cc = graft.llm.Dedup.connectedComponents(
-        env.select(col("id")),
-        graft.llm.Dedup.starEdges(
-          env.select(col("id"),
-            md5(to_json(col("envelope"))).as("akey")), "akey", "id"))
-      val canonical = graft.llm.Dedup.electCanonical(
-        cc.join(env.select(col("id"), col("num_samples")), "id"),
-        "rep", "id", "num_samples")
-      val w = Window.partitionBy("id").orderBy("frame_idx")
-      val cuts = mm.decodeVideoFrames(byExt("avi"), "id")
-        .withColumn("prev", lag(col("sum_gray"), 1).over(w))
-        .filter(col("prev").isNotNull &&
-          abs(col("sum_gray") - col("prev")) > 300)
-      val counts = canonical
-        .join(caps, canonical("canonical") === caps("id"))
-        .select(col("canonical").as("doc_id"),
-          (lit(128L) + graft.llm.TextAnalysis.tokenCount(col("caption")))
-            .as("n_tokens"))
-      graft.llm.CorpusPipeline.packByCount(counts,
-          capacity = 384, blockSize = 64)
-        .agg(count(lit(1)).as("n_canonical"),
-          countDistinct(col("block") * 100000L + col("bin"))
-            .as("n_blocks"))
-        .crossJoin(cuts.agg(count(lit(1)).as("n_cuts")))
+      graft.llm.Multimodal.avChain(d, mediaPlant(d),
+        Registry.scratchDir("probe_m19_tar"))
     }),
-    // t34/l26 shape (round-16): the trained-filter fit+score at scale —
-    // 10 integer-GD iterations over the cached presence-feature table
-    // (the new cost ceiling, 5.2-5.3 s committed at sf0.1). Claim
-    // measured: iteration cost is linear in the count table (built
-    // once, cached), the per-round driver round-trip stays <=257 rows,
-    // and the scoring pass is one broadcast join — so wall and shuffle
-    // grow ~linearly with the corpus at a FIXED iteration count.
+    // t34/l26 shape: the trained-filter fit+score at scale — 10
+    // integer-GD iterations over the cached presence-feature table.
+    // Claim measured: iteration cost is linear in the count table
+    // (built once, cached), the per-round driver round-trip stays
+    // <=257 rows, and scoring is one broadcast join — so wall and
+    // shuffle grow ~linearly at a FIXED iteration count.
     "t34_logreg_fit" -> ((s, dir) => {
       val lr = graft.llm.LogReg
-      val d = docs(s, dir).select(col("doc_id"),
-        (conv(substring(md5(concat(lit("t34:"), col("doc_id"))),
-          1, 15), 16, 10).cast("long") % 100 < 70).as("is_train"),
-        (col("lang") === "en").as("is_pos"),
-        concat(col("text"), when(col("doc_id") % 2 === 0,
-          concat(lit(" m"), col("lang"))).otherwise(lit("")))
-          .as("text"))
-      val train = lr.hashedCounts(d.filter(col("is_train")),
-        "doc_id", "is_pos", "text", buckets = 256)
-      val rest = lr.hashedCounts(d.filter(!col("is_train")),
-        "doc_id", "is_pos", "text", buckets = 256)
-      val w = lr.fit(train, iters = 10, lrDen = 4L)
-      lr.margins(rest, w)
+      val split = lr.labeledSplit(docs(s, dir), "t34:")
+      lr.margins(split.heldout, lr.fit(split.train, iters = 10, lrDen = 4L))
     }),
     // m13-shape media pair VALVE posture (round-16): the real audio
     // decode → envelope digest → pair join, planted with 1000 bounded
@@ -470,28 +237,19 @@ object ScaleProbe {
     })
   )
 
-  /** The m13 registry shape — synthetic WAVs, real RIFF decode, exact
-    * envelope digest, distributed pair self-join — with a skew plant:
+  /** The m20 registry shape (synthetic WAVs, real RIFF decode, exact
+    * envelope digest, distributed pair self-join) with a skew plant:
     * every 10th doc shares ONE degenerate content key; the rest spread
     * over 1000 bounded classes.
     */
   private def mediaPairs(s: SparkSession, dir: String, cap: Int)
-      : DataFrame = {
-    val keyed = docs(s, dir).select(col("doc_id").cast("long").as("id"),
-      when(col("doc_id") % 10 === 0, lit(0L))
-        .otherwise(col("doc_id") % 1000 + 1L).as("key"),
-      lit(1).as("scale"))
-    val wavs = graft.llm.Multimodal.withSyntheticAudioScaled(
-      keyed, "id", "key", "scale", baseSamples = 200, rate = 8000)
-    val env = graft.llm.Multimodal.audioWindowEnergy(wavs, "id",
-      windows = 10)
-    val feats = env.groupBy("id")
-      .agg(md5(to_json(sort_array(
-        collect_list(struct(col("win"), col("energy"))))))
-        .as("content_key"))
-    graft.llm.Dedup.pairsWithinGroups(feats, "content_key", "id",
+      : DataFrame =
+    graft.llm.Multimodal.audioPairs(
+      docs(s, dir).select(col("doc_id").cast("long").as("id"),
+        when(col("doc_id") % 10 === 0, lit(0L))
+          .otherwise(col("doc_id") % 1000 + 1L).as("key"),
+        lit(1).as("scale")),
       maxGroupSize = cap)
-  }
 
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: ScaleProbe <dir1> <dir2> ...")
@@ -506,11 +264,8 @@ object ScaleProbe {
           shuffleRecords.addAndGet(m.shuffleWriteMetrics.recordsWritten)
       }
     })
-    // dev iteration filter (comma-separated probe-name prefixes)
-    val only = sys.env.get("SPARK_GRAFT_PROBE_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
     args.foreach { dir =>
-      probes.filter { case (n, _) => only.forall(_.exists(n.startsWith)) }
+      probes.filter { case (n, _) => Bench.selected(n) }
         .foreach { case (name, fn) =>
         CacheScope.harness.release()
         spark.catalog.clearCache()

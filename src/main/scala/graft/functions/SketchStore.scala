@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.sketch.CountMinSketch
 
@@ -130,8 +130,8 @@ object SketchStore {
   def portableHllDistinct(df: DataFrame, groupCols: Seq[String],
                           itemCol: String): DataFrame = {
     val withB = df
-      .withColumn("__h", expr(
-        s"CAST(conv(substring(md5(concat('hll:', CAST($itemCol AS STRING))), 1, 15), 16, 10) AS BIGINT)"))
+      .withColumn("__h",
+        graft.llm.CorpusPipeline.hashUniform("hll:", col(itemCol)))
       // integer div/mod only: __h is up to 2^60, beyond double's 53-bit
       // mantissa — a float division here would corrupt buckets
       .withColumn("__b", expr("__h % 512"))
@@ -191,6 +191,12 @@ object SketchStore {
        |      FROM ph_reg GROUP BY ALL)))""".stripMargin
   }
 
+  /** Counter column of a portable CM row: the salted hash-uniform of
+    * (row, item) mod `w`.
+    */
+  private def cmCell(w: Int): Column = graft.llm.CorpusPipeline.hashUniform(
+    "cm", concat(col("row").cast("string"), lit(":"), col("item"))) % w
+
   /** PORTABLE Count-Min — the audit twin of [[cmBuild]]/[[cmProbe]]:
     * d=4 rows x w=271 counters, row hashes from md5 arithmetic, so the
     * whole sketch table AND every point estimate (min over rows of the
@@ -203,8 +209,7 @@ object SketchStore {
     df.select(col(itemCol).cast("string").as("item"))
       .select(col("item"),
         explode(sequence(lit(0), lit(d - 1))).as("row"))
-      .withColumn("cc", expr(
-        s"CAST(conv(substring(md5(concat('cm', CAST(row AS STRING), ':', item)), 1, 15), 16, 10) AS BIGINT) % $w"))
+      .withColumn("cc", cmCell(w))
       .groupBy("row", "cc")
       .agg(count(lit(1)).as("cnt"))
 
@@ -220,8 +225,7 @@ object SketchStore {
     probes.select(col("item").cast("string").as("item"))
       .select(col("item"),
         explode(sequence(lit(0), lit(d - 1))).as("row"))
-      .withColumn("cc", expr(
-        s"CAST(conv(substring(md5(concat('cm', CAST(row AS STRING), ':', item)), 1, 15), 16, 10) AS BIGINT) % $w"))
+      .withColumn("cc", cmCell(w))
       .join(sketch, Seq("row", "cc"), "left")
       .groupBy("item")
       .agg(min(coalesce(col("cnt"), lit(0L))).as("est_cnt"))

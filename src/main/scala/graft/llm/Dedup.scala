@@ -568,15 +568,12 @@ object Dedup {
       .where(col("u") =!= col("v"))
       .distinct()
       .persist(MEMORY_AND_DISK)
-    val dbg = sys.env.contains("GRAFT_CC_DEBUG")
     var converged = false
     var cached = init
     var i = 0
     while (!converged && i < maxIter) {
-      val t0 = System.nanoTime()
       val next = smallStar(largeStar(cached)).persist(MEMORY_AND_DISK)
       val w = nonStarWitness(next) // one action: materializes + tests
-      if (dbg) println(s"CCDBG round $i witness=$w ${(System.nanoTime() - t0) / 1e9}s")
       if (cached ne init) cached.unpersist() // superseded once next is live
       cached = next
       converged = w == 0L
@@ -705,6 +702,61 @@ object Dedup {
         least(col("sza"), col("szb")))
       .filter(col("containment") >= threshold)
       .select(col("id_a"), col("id_b"), col("containment"))
+  }
+
+  /** Distinct word trigrams (doc_id, gram) of a `documents`-shaped
+    * (doc_id, text) frame: lowercased, whitespace-split tokens, one row
+    * per distinct trigram. Shingles via posexplode + window lead — every
+    * expression in the hot path is whole-stage-codegen'd (a
+    * transform/element_at lambda formulation ran ~10x slower: higher-
+    * order functions evaluate interpreted under a Generate). A doc with
+    * fewer than 3 tokens yields no gram and so can never pair.
+    */
+  def docTrigrams(docs: DataFrame): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val toks = expr(
+      "filter(split(lower(trim(text)), '\\\\s+'), x -> length(x) > 0)")
+    val w = Window.partitionBy("doc_id").orderBy("pos")
+    docs.select(col("doc_id"), posexplode(toks).as(Seq("pos", "tok")))
+      .select(col("doc_id"), col("tok"),
+        lead("tok", 1).over(w).as("t1"), lead("tok", 2).over(w).as("t2"))
+      .filter(col("t2").isNotNull)
+      .select(col("doc_id"),
+        concat_ws(" ", col("tok"), col("t1"), col("t2")).as("gram"))
+      .distinct()
+  }
+
+  /** d20's portable LSH candidate pairs (id_a < id_b) over
+    * [[docTrigrams]] rows: ONE md5 per distinct (doc, gram) (first 8
+    * hex chars mod p = 2^31-1), the 32 seed hashes from the universal
+    * family (a_i·g + b_i) mod p in pure BIGINT arithmetic (a_i·g <
+    * 2^62, no overflow), signature = per-seed min, 8 bands × 4 rows
+    * string-keyed, candidates = docs sharing any band signature. Unlike
+    * [[portableMinhashBands]] a short doc gets no fallback gram.
+    */
+  def trigramLshCandidates(gramRows: DataFrame): DataFrame = {
+    val p = lit(2147483647L)
+    val sig = gramRows
+      .select(col("doc_id"),
+        (conv(substring(md5(col("gram")), 1, 8), 16, 10)
+          .cast("long") % p).as("g"))
+      .select(col("doc_id"), col("g"),
+        explode(sequence(lit(0), lit(31))).as("seed"))
+      .select(col("doc_id"), col("seed"),
+        (((lit(2654435761L) * (col("seed") + 1) % p) * col("g")
+          + lit(40503L) * (col("seed") + 1) % p) % p).as("h"))
+      .groupBy("doc_id", "seed").agg(min(col("h")).as("mh"))
+    val bands = sig
+      .groupBy(col("doc_id"), (col("seed") / 4).cast("int").as("band"))
+      .agg(array_join(transform(
+        sort_array(collect_list(struct(col("seed"), col("mh")))),
+        x => x.getField("mh").cast("string")), "-").as("sig"))
+    bands.alias("a")
+      .join(bands.alias("b"),
+        col("a.band") === col("b.band") && col("a.sig") === col("b.sig")
+          && col("a.doc_id") < col("b.doc_id"))
+      .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
+      .distinct()
   }
 
   /** CCNet-style sub-document dedup (Wenzek et al., arXiv:1911.00359

@@ -1,6 +1,6 @@
 package graft.llm
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** In-engine TRAINED quality classifier: fixed-iteration batch
@@ -32,6 +32,41 @@ import org.apache.spark.sql.functions._
   */
 object LogReg {
 
+  /** A labeled corpus and its two sides' 256-bucket [[hashedCounts]]. */
+  final case class LabeledSplit(docs: DataFrame, train: DataFrame,
+                                heldout: DataFrame)
+
+  /** The deterministic labeled split every trained-filter entry fits
+    * and scores on: `docs` is (doc_id, is_train, is_pos, text) — a
+    * salted [[CorpusPipeline.hashUniform]] 70/30 train flag, the
+    * `lang = 'en'` label, and the text with a lang-marker token planted
+    * on even ids only (a PARTIAL class signal: even docs are separable,
+    * odd docs fall back to the prior — the synthetic vocabulary itself
+    * is lang-independent).
+    */
+  def labeledSplit(documents: DataFrame, salt: String): LabeledSplit = {
+    val docs = documents.select(col("doc_id"),
+      (CorpusPipeline.hashUniform(salt, col("doc_id")) % 100 < 70)
+        .as("is_train"),
+      (col("lang") === "en").as("is_pos"),
+      concat(col("text"), when(col("doc_id") % 2 === 0,
+        concat(lit(" m"), col("lang"))).otherwise(lit(""))).as("text"))
+    def counts(side: Column) = hashedCounts(docs.filter(side), "doc_id",
+      "is_pos", "text", buckets = 256)
+    LabeledSplit(docs, counts(col("is_train")), counts(!col("is_train")))
+  }
+
+  /** Per-doc held-out verdicts from [[margins]]: (doc_id, label,
+    * score_micro, pred, correct), ordered by doc_id.
+    */
+  def verdicts(margins: DataFrame): DataFrame =
+    margins.select(col("id").as("doc_id"),
+        col("y").cast("int").as("label"),
+        col("m").as("score_micro"),
+        (col("m") > 0).cast("int").as("pred"),
+        ((col("m") > 0) === col("y")).cast("int").as("correct"))
+      .orderBy("doc_id")
+
   /** Hashed-unigram bucket PRESENCE features plus an intercept
     * pseudo-bucket b = -1: (id, y, b, c) with c = 1 per distinct
     * (doc, bucket). Presence, not counts, on purpose: raw counts make
@@ -43,20 +78,9 @@ object LogReg {
     * replays it exactly).
     */
   def hashedCounts(docs: DataFrame, idCol: String, labelCol: String,
-                   textCol: String, buckets: Int): DataFrame = {
-    val toks = expr(s"filter(split(lower(trim($textCol)), " +
-      "'\\\\s+'), x -> length(x) > 0)")
-    val grams = docs.select(col(idCol).as("id"),
-        col(labelCol).cast("boolean").as("y"), explode(toks).as("tok"))
-      .select(col("id"), col("y"),
-        (conv(substring(md5(col("tok")), 1, 8), 16, 10)
-          .cast("long") % buckets).as("b"))
-      .distinct()
-      .withColumn("c", lit(1L))
-    grams.unionByName(docs.select(col(idCol).as("id"),
-      col(labelCol).cast("boolean").as("y"),
-      lit(-1L).as("b"), lit(1L).as("c")))
-  }
+                   textCol: String, buckets: Int): DataFrame =
+    presence(docs, Seq("id" -> col(idCol),
+      "y" -> col(labelCol).cast("boolean")), textCol, buckets)
 
   /** Label-free twin of [[hashedCounts]] for SCORING unlabeled corpora
     * (the trained filter's steady state): (id, b, c) presence features
@@ -65,17 +89,25 @@ object LogReg {
     * apply path.
     */
   def features(docs: DataFrame, idCol: String, textCol: String,
-               buckets: Int): DataFrame = {
+               buckets: Int): DataFrame =
+    presence(docs, Seq("id" -> col(idCol)), textCol, buckets)
+
+  /** (keys..., b, c): each distinct md5 token bucket b with c = 1, plus
+    * the intercept row b = -1 per doc; `keys` are (name, column) pairs.
+    */
+  private def presence(docs: DataFrame, keys: Seq[(String, Column)],
+                       textCol: String, buckets: Int): DataFrame = {
     val toks = expr(s"filter(split(lower(trim($textCol)), " +
       "'\\\\s+'), x -> length(x) > 0)")
-    docs.select(col(idCol).as("id"), explode(toks).as("tok"))
-      .select(col("id"),
+    val aliased = keys.map { case (n, c) => c.as(n) }
+    docs.select(aliased :+ explode(toks).as("tok"): _*)
+      .select(keys.map(k => col(k._1)) :+
         (conv(substring(md5(col("tok")), 1, 8), 16, 10)
-          .cast("long") % buckets).as("b"))
+          .cast("long") % buckets).as("b"): _*)
       .distinct()
       .withColumn("c", lit(1L))
-      .unionByName(docs.select(col(idCol).as("id"),
-        lit(-1L).as("b"), lit(1L).as("c")))
+      .unionByName(docs.select(
+        aliased :+ lit(-1L).as("b") :+ lit(1L).as("c"): _*))
   }
 
   /** Integer margin per doc from a weight map, label-free: (id, m) with

@@ -952,6 +952,28 @@ object Multimodal {
     }(encoder)
   }
 
+  /** Exact audio content key per clip: md5 over the ordered
+    * 10-window [[audioWindowEnergy]] envelope — (id, content_key).
+    * Byte-identical WAVs collide; any decode divergence splits them.
+    */
+  def audioContentKeys(wavs: DataFrame, idCol: String): DataFrame =
+    audioWindowEnergy(wavs, idCol, windows = 10).groupBy("id")
+      .agg(md5(to_json(sort_array(
+        collect_list(struct(col("win"), col("energy"))))))
+        .as("content_key"))
+
+  /** Planted-key audio pairs (m20 and the m13-shape valve probe):
+    * 200-sample synthetic WAVs for `keyed` (id, key, scale), their
+    * [[audioContentKeys]], and the distributed pair self-join with
+    * [[Dedup.pairsWithinGroups]]' degenerate-key valve at
+    * `maxGroupSize` (0 = uncapped).
+    */
+  def audioPairs(keyed: DataFrame, maxGroupSize: Int): DataFrame =
+    Dedup.pairsWithinGroups(
+      audioContentKeys(withSyntheticAudioScaled(keyed, "id", "key",
+        "scale", baseSamples = 200, rate = 8000), "id"),
+      "content_key", "id", maxGroupSize = maxGroupSize)
+
   // ------------------------------------------------------------------
   // PNG chunk surgery: metadata extraction + ancillary-chunk strip —
   // the image-side compliance pass a training pipeline runs before
@@ -1664,5 +1686,174 @@ object Multimodal {
           Row(r.getLong(0), pngInsertText(r.getAs[Array[Byte]](1), kvs))
         }
       }(enc)
+  }
+
+  /** The WebDataset container leg both media chains start from: write
+    * `media` (id, name, payload) plus one `<prefix>/<id>.txt` caption
+    * member per doc through gzip TAR shards in `scratch`, read them back
+    * (a corrupt shard fails `chain`) and return the sample frame —
+    * persisted (harness scope): the TAR re-streams per action and every
+    * stage hangs off the samples, so this is the one container decode.
+    */
+  private def tarRoundTrip(media: DataFrame, docs: DataFrame,
+                           prefix: String, scratch: String,
+                           chain: String): DataFrame = {
+    import graft.sources.TarIngest
+    val tarIn = media.unionByName(docs.select(
+      col("doc_id").cast("long").as("id"),
+      format_string(s"$prefix/%05d.txt", col("doc_id")).as("name"),
+      encode(coalesce(col("text"), lit("")), "UTF-8").as("payload")))
+    TarIngest.writeTarDir(
+      tarIn.repartition(4, col("id")).drop("id"), scratch, gzip = true)
+    val (members, audit) = TarIngest.readTarDir(docs.sparkSession, scratch)
+    require(audit.filter(col("corrupt")).count() == 0,
+      s"$chain: corrupt shards")
+    graft.CacheScope.harness.track(TarIngest.wdsSamples(members)).toDF()
+  }
+
+  /** (id, payload) of the `ext` members of a WebDataset sample frame. */
+  private def samplePayloads(samples: DataFrame, ext: String): DataFrame =
+    samples.filter(col("ext") === ext)
+      .select(regexp_extract(col("sample_key"), "(\\d+)$", 1)
+        .cast("long").as("id"), col("payload"))
+
+  /** (id, caption) from the `.txt` members of a sample frame. */
+  private def sampleCaptions(samples: DataFrame): DataFrame =
+    samplePayloads(samples, "txt")
+      .select(col("id"), decode(col("payload"), "UTF-8").as("caption"))
+
+  /** The image-text end-to-end chain (m18, the LAION/DataComp shape)
+    * from the CONTAINER: synthetic cross-scale PNGs for `ids` (id, key,
+    * scale) carrying each `gps` (id, gps_v) value as a planted tEXt
+    * chunk, plus `docs`' (doc_id, text) captions, through TAR shards in
+    * `scratch` → PNG metadata proving the planted GPS SURVIVED the round
+    * trip → ancillary strip INSIDE the chain, proven lossless against a
+    * strip of the pristine encode → dHash over the stripped bytes →
+    * star-edge connected components → canonical election by DECODED
+    * width → caption join → interleaved packing (64 image tokens +
+    * caption tokens). Pixels never shuffle: hashes, widths and token
+    * counts travel. Returns the (stage, n_rows) report.
+    */
+  def multimodalChain(docs: DataFrame, ids: DataFrame, gps: DataFrame,
+                      scratch: String): DataFrame = {
+    val pristine = withSyntheticImagesScaled(ids, "id", "key", "scale",
+      baseW = 36, baseH = 32)
+    val planted = withPlantedText(pristine.join(gps, "id"), "id",
+      "payload", Seq("gps" -> "gps_v"))
+    val samples = tarRoundTrip(planted.select(col("id"),
+        format_string("img/%05d.png", col("id")).as("name"),
+        col("payload")),
+      docs, "img", scratch, "m18")
+    val pngs = samplePayloads(samples, "png")
+    val gpsSeen = pngMeta(pngs, "id", "payload")
+      .filter(col("keyword") === "gps")
+      .join(gps, "id")
+      .filter(col("value") === col("gps_v"))
+    // strip INSIDE the chain, on the container bytes; pinned — the
+    // dHash, the width decode and the restored-proof all read it
+    val stripped = graft.CacheScope.harness.track(
+      stripPngMeta(pngs, "id", "payload")
+        .select(col("id"), col("payload"))).toDF()
+    val restored = stripped
+      .select(col("id"), md5(col("payload")).as("m1"))
+      .join(stripPngMeta(pristine, "id", "payload")
+        .select(col("id"), md5(col("payload")).as("m0")), "id")
+      .filter(col("m1") === col("m0"))
+    val hashed = dhashes(stripped, "id").filter(col("dhash").isNotNull)
+    val cc = Dedup.connectedComponents(hashed.select(col("id")),
+      Dedup.starEdges(hashed, "dhash", "id"))
+    val meta = decodeImageFeatures(stripped, "id")
+      .select(col("id"), col("width").cast("long").as("width"))
+    // m17's rule through the map-side-combinable argmax election —
+    // never a rank window over the connected-components rep key
+    val canonical = Dedup.electCanonical(
+        cc.join(meta, "id"), "rep", "id", "width")
+      .select(col("rep"), col("canonical"))
+    val caps = sampleCaptions(samples)
+    val withCap = canonical.join(caps, canonical("canonical") === caps("id"))
+    val counts = withCap.select(col("canonical").as("doc_id"),
+      (lit(64L) + TextAnalysis.tokenCount(col("caption"))).as("n_tokens"))
+    val packed = CorpusPipeline.packByCount(counts,
+      capacity = 256, blockSize = 8)
+    // stage 0 counts the CACHED sample frame (one row per member —
+    // wdsSamples is a per-member annotation), not the raw members,
+    // which would re-stream the archives for one count
+    CorpusPipeline.stageReport(
+      ("0_tar_members", samples, count(lit(1))),
+      ("1_samples", samples, countDistinct(col("sample_key"))),
+      ("2_gps_seen", gpsSeen, count(lit(1))),
+      ("3_strip_restored", restored, count(lit(1))),
+      ("4_canonical", canonical, count(lit(1))),
+      ("5_caption_join", withCap, count(lit(1))),
+      ("6_blocks", packed,
+        countDistinct(col("block") * 10000L + col("bin"))),
+      ("7_tokens", counts, sum(col("n_tokens"))))
+  }
+
+  /** The audio/video end-to-end chain (m19, m18's remaining-modality
+    * twin) from the CONTAINER: synthetic cross-duration WAVs and MJPEG
+    * AVIs for `ids` (id, key, scale) plus `docs`' (doc_id, text)
+    * captions, through TAR shards in `scratch` → WAV bytes proven
+    * restored bit-for-bit → real RIFF/PCM decode to the
+    * DURATION-INVARIANT envelope → star-edge connected components →
+    * LONGEST-RENDITION election via the argmax aggregate → MJPEG/AVI
+    * walk to m11's scene-cut features → caption join → interleaved
+    * packing (128 audio tokens + caption tokens). Samples and pixels
+    * never shuffle: envelopes, durations and token counts travel.
+    * Returns the (stage, n_rows) report.
+    */
+  def avChain(docs: DataFrame, ids: DataFrame, scratch: String)
+      : DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val wavs = withSyntheticAudioScaled(ids, "id", "key", "scale",
+      baseSamples = 1000, rate = 8000)
+    val avis = withSyntheticVideos(ids, "id", frames = 6)
+    val samples = tarRoundTrip(
+      wavs.select(col("id"),
+          format_string("av/%05d.wav", col("id")).as("name"),
+          col("payload"))
+        .unionByName(avis.select(col("id"),
+          format_string("av/%05d.avi", col("id")).as("name"),
+          col("payload"))),
+      docs, "av", scratch, "m19")
+    val wavsIn = samplePayloads(samples, "wav")
+    // container round trip proven lossless on the audio bytes
+    val restored = wavsIn
+      .select(col("id"), md5(col("payload")).as("m1"))
+      .join(wavs.select(col("id"), md5(col("payload")).as("m0")), "id")
+      .filter(col("m1") === col("m0"))
+    // ONE audio decode feeds dedup key, duration and the count
+    val env = graft.CacheScope.harness.track(
+      audioEnvelopes(wavsIn, "id", windows = 10)).toDF()
+    val cc = Dedup.connectedComponents(env.select(col("id")),
+      Dedup.starEdges(env.select(col("id"),
+        md5(to_json(col("envelope"))).as("akey")), "akey", "id"))
+    val canonical = Dedup.electCanonical(
+      cc.join(env.select(col("id"), col("num_samples")), "id"),
+      "rep", "id", "num_samples")
+    // video features: the real AVI walk, m11's scene-cut rule
+    val w = Window.partitionBy("id").orderBy("frame_idx")
+    val cuts = decodeVideoFrames(samplePayloads(samples, "avi"), "id")
+      .withColumn("prev", lag(col("sum_gray"), 1).over(w))
+      .filter(col("prev").isNotNull &&
+        abs(col("sum_gray") - col("prev")) > 300)
+    val caps = sampleCaptions(samples)
+    val withCap = canonical.join(caps, canonical("canonical") === caps("id"))
+    val counts = withCap.select(col("canonical").as("doc_id"),
+      (lit(128L) + TextAnalysis.tokenCount(col("caption"))).as("n_tokens"))
+    val packed = CorpusPipeline.packByCount(counts,
+      capacity = 384, blockSize = 8)
+    CorpusPipeline.stageReport(
+      ("0_tar_members", samples, count(lit(1))),
+      ("1_samples", samples, countDistinct(col("sample_key"))),
+      ("2_wav_restored", restored, count(lit(1))),
+      ("3_audio_envelopes", env, count(lit(1))),
+      ("4_scene_cuts", cuts, count(lit(1))),
+      ("5_clusters", cc, countDistinct(col("rep"))),
+      ("6_canonical_idsum", canonical, sum(col("canonical"))),
+      ("7_caption_join", withCap, count(lit(1))),
+      ("8_blocks", packed,
+        countDistinct(col("block") * 10000L + col("bin"))),
+      ("9_tokens", counts, sum(col("n_tokens"))))
   }
 }

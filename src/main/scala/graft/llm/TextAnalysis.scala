@@ -332,6 +332,39 @@ object TextAnalysis {
         .as("mean_logprob"))
   }
 
+  /** CCNet-style perplexity buckets: head/middle/tail per source from
+    * `scored` (id, source, avg_logp, `nCol`), with tercile thresholds
+    * fitted on a BOUNDED DETERMINISTIC per-source sample (the first 100
+    * scored ids via the native TopKPerKey — partial heaps prune before
+    * the exchange). Threshold ranks are integer arithmetic (ceil(n/3) =
+    * (n+2) div 3); classification is a broadcast join — no per-source
+    * one-task window over the corpus. Docs with no score (`nCol` = 0
+    * leaves avg_logp NULL) are "unscored". Output (doc_id, source,
+    * bucket) ordered by doc_id.
+    */
+  def perplexityBuckets(scored: DataFrame, nCol: String): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val sample = graft.plans.TopKPerKey(
+        scored.filter(col(nCol) > 0)
+          .select(col("source"), col("id"), col("avg_logp")),
+        keys = Seq(col("source")), order = Seq(col("id").asc), k = 100)
+    val ranked = sample
+      .withColumn("r", row_number().over(Window.partitionBy("source")
+        .orderBy(col("avg_logp").desc, col("id"))))
+      .withColumn("n", count(lit(1)).over(Window.partitionBy("source")))
+    val th = ranked.filter(col("r") === expr("(n + 2) div 3"))
+      .select(col("source"), col("avg_logp").as("t1"))
+      .join(ranked.filter(col("r") === expr("(2 * n + 2) div 3"))
+        .select(col("source"), col("avg_logp").as("t2")), "source")
+    scored.join(broadcast(th), Seq("source"), "left")
+      .select(col("id").as("doc_id"), col("source"),
+        when(col("avg_logp").isNull, "unscored")
+          .when(col("avg_logp") >= col("t1"), "head")
+          .when(col("avg_logp") >= col("t2"), "middle")
+          .otherwise("tail").as("bucket"))
+      .orderBy("doc_id")
+  }
+
   /** Bigram-LM document scoring with add-one smoothing — the CONDITIONAL
     * upgrade of [[unigramLogProb]], and unlike it hash-exact across
     * engines: P(w2|w1) = (c(w1,w2)+1) / (c(w1·)+V), where c(w1·) is the

@@ -151,8 +151,7 @@ object Ingest {
       .load(dir)
       .withColumn("rel_path", rel(col("path")))
     val head = Seq(
-      expr("CAST(conv(substring(md5(rel_path), 1, 15), 16, 10) AS BIGINT)")
-        .as("id"),
+      graft.llm.CorpusPipeline.hashUniform("", col("rel_path")).as("id"),
       col("rel_path"), col("length"), col("modificationTime"))
     // small branch reads bytes; oversize branch references only metadata
     // columns, so binaryFile's column pruning never opens those files

@@ -40,4 +40,31 @@ object Scans {
     val est = df.queryExecution.optimizedPlan.stats.sizeInBytes
     if (est <= maxSplit && target > 2) df.repartition(target) else df
   }
+
+  /** Recursive driver-side listing of the files under `dir` matching
+    * `glob`: (path relative to `dir`, full URI) pairs. Paths only,
+    * never content — the same cost class as Spark's FileIndex (~100k
+    * archive names at 100 TB is megabytes, not a collect of data).
+    */
+  def listFiles(spark: org.apache.spark.sql.SparkSession, dir: String,
+                glob: String): Seq[(String, String)] = {
+    import org.apache.hadoop.fs.{GlobFilter, Path}
+    val basePath = new Path(dir)
+    val fs = basePath.getFileSystem(spark.sessionState.newHadoopConf())
+    val qualified = fs.makeQualified(basePath)
+    val baseUriPath = qualified.toUri.getPath.stripSuffix("/")
+    val filter = new GlobFilter(glob)
+    val files = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
+    val it = fs.listFiles(qualified, true)
+    while (it.hasNext) {
+      val st = it.next()
+      if (st.isFile && filter.accept(st.getPath)) {
+        val up = st.getPath.toUri.getPath
+        val rel = if (up.startsWith(baseUriPath + "/"))
+          up.substring(baseUriPath.length + 1) else up
+        files += rel -> st.getPath.toString
+      }
+    }
+    files.toSeq
+  }
 }

@@ -263,23 +263,8 @@ object TarIngest {
                  glob: String = "*.tar*",
                  maxMemberBytes: Long = 64L * 1024 * 1024)
       : (DataFrame, DataFrame) = {
-    import org.apache.hadoop.fs.{GlobFilter, Path}
-    val basePath = new Path(dir)
-    val fs = basePath.getFileSystem(spark.sessionState.newHadoopConf())
-    val qualified = fs.makeQualified(basePath)
-    val baseUriPath = qualified.toUri.getPath.stripSuffix("/")
-    val filter = new GlobFilter(glob)
-    val files = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-    val it = fs.listFiles(qualified, true)
-    while (it.hasNext) {
-      val st = it.next()
-      if (st.isFile && filter.accept(st.getPath)) {
-        val up = st.getPath.toUri.getPath
-        val rel = if (up.startsWith(baseUriPath + "/"))
-          up.substring(baseUriPath.length + 1) else up
-        files += rel -> st.getPath.toString
-      }
-    }
+    import org.apache.hadoop.fs.Path
+    val files = Scans.listFiles(spark, dir, glob)
     val combinedSchema = StructType(
       StructField("rel_path", StringType) +:
         (memberSchema.fields.toSeq ++ auditFields))
@@ -287,7 +272,7 @@ object TarIngest {
     import spark.implicits._
     val slices = math.max(1,
       math.min(files.length, spark.sparkContext.defaultParallelism))
-    val decoded = files.toSeq.toDF("rel_path", "uri")
+    val decoded = files.toDF("rel_path", "uri")
       .repartition(slices)
       .mapPartitions { part =>
         part.flatMap { fr =>

@@ -210,26 +210,8 @@ object WarcIngest {
                   glob: String = "*.{warc,wet}*",
                   maxRecordBytes: Long = 64L * 1024 * 1024)
       : (DataFrame, DataFrame) = {
-    import org.apache.hadoop.fs.{GlobFilter, Path}
-    // driver-side listing: paths and sizes only, never content — the
-    // same cost class as Spark's FileIndex (and ~100k archive names at
-    // 100 TB is megabytes, not a collect of data)
-    val basePath = new Path(dir)
-    val fs = basePath.getFileSystem(spark.sessionState.newHadoopConf())
-    val qualified = fs.makeQualified(basePath)
-    val baseUriPath = qualified.toUri.getPath.stripSuffix("/")
-    val filter = new GlobFilter(glob)
-    val files = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-    val it = fs.listFiles(qualified, true)
-    while (it.hasNext) {
-      val st = it.next()
-      if (st.isFile && filter.accept(st.getPath)) {
-        val up = st.getPath.toUri.getPath
-        val rel = if (up.startsWith(baseUriPath + "/"))
-          up.substring(baseUriPath.length + 1) else up
-        files += rel -> st.getPath.toString
-      }
-    }
+    import org.apache.hadoop.fs.Path
+    val files = Scans.listFiles(spark, dir, glob)
     val combinedSchema = StructType(
       StructField("rel_path", StringType) +:
         (recordSchema.fields.toSeq ++ auditFields))
@@ -237,7 +219,7 @@ object WarcIngest {
     import spark.implicits._
     val slices = math.max(1,
       math.min(files.length, spark.sparkContext.defaultParallelism))
-    val decoded = files.toSeq.toDF("rel_path", "uri")
+    val decoded = files.toDF("rel_path", "uri")
       .repartition(slices)
       .mapPartitions { part =>
         part.flatMap { fr =>
