@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.etl.{CombineData, Process, TeamMetrics}
@@ -83,6 +83,10 @@ object Pipeline {
     }
   }
 
+  /** The stages. Their Spark work is the three sink writes, each under its
+    * own job description (`pipeline:<sink>`); the statistics are observed
+    * on the frames those writes consume, so they add no job.
+    */
   private def runStages(spark: SparkSession, cfg: Config,
                         scope: CacheScope): Stats = {
     val today = lit(cfg.today).cast("date")
@@ -92,11 +96,33 @@ object Pipeline {
       .withColumn("match_id", lit(null).cast("string"))
       .withColumn("kickoff_time", col("start_time"))
     val fixtures = Process.processFixtures(rawFixtures, today, cfg.aliases)
-    writeCsv(isoDates(fixtures), s"${cfg.outDir}/fixtures")
+
+    // pipeline_stats parity (`pipeline.py:103-118`, A8/A9/A12): the
+    // statistics are observed metrics on the two sink writes below, so
+    // they cost no Spark action of their own. Observed metrics take no
+    // distinct aggregate: distinct leagues and teams are the sizes of
+    // collected sets (small: one entry per league or club).
+    val fixtureCols = Seq("match_id", "date", "home_team", "away_team",
+      "league", "kickoff_time")
+    val fxMetrics = Seq(
+      count(lit(1)).as("n"),
+      size(collect_set(col("league"))).as("leagues"),
+      size(array_union(collect_set(col("home_team")),
+        collect_set(col("away_team")))).as("named_teams"),
+      min(col("date")).cast("string").as("start_date"),
+      max(col("date")).cast("string").as("end_date")) ++
+      fixtureCols.map(c => sum(col(c).isNotNull.cast("long")).as(s"nn_$c"))
+    val fxObs = Observation()
+    withJobDescription(spark, "pipeline:fixtures") {
+      writeCsv(isoDates(fixtures.observe(fxObs, fxMetrics.head, fxMetrics.tail: _*)),
+        s"${cfg.outDir}/fixtures")
+    }
+    val fx = fxObs.get
+    val nFix = fx("n").asInstanceOf[Long]
 
     // F7 — non-empty guard (`processors/data_processor.py:43-46` et al):
     // nothing upcoming → emit empty stats, skip the downstream stages.
-    if (fixtures.isEmpty) {
+    if (nFix == 0) {
       val empty = Stats(0, 0, 0, 0, 0.0, "", "", cfg.lookbackMatches)
       java.nio.file.Files.createDirectories(
         java.nio.file.Paths.get(cfg.outDir))
@@ -109,7 +135,6 @@ object Pipeline {
     // Stage 4 — process team history.
     val rawHistory = readCsv(spark, cfg.historyPath, graft.model.Tables.teamHistory)
     val history = Process.processHistory(rawHistory, today, cfg.aliases)
-    writeCsv(isoDates(history), s"${cfg.outDir}/history")
 
     // Stage 5a — rolling team metrics (A1–A3; one window pass).
     val statCols = Seq("goals_for", "goals_against", "shots",
@@ -129,39 +154,39 @@ object Pipeline {
       .withColumn("match_quality",
         Normalize.matchQuality(col("home_win_ratio"), col("away_win_ratio")))
       .orderBy("date", "match_id")                          // O3
-    writeCsv(isoDates(combined), s"${cfg.outDir}/football_data")
+    val joinedObs = Observation()
+    withJobDescription(spark, "pipeline:football_data") {
+      writeCsv(isoDates(combined.observe(joinedObs, count(lit(1)).as("n"))),
+        s"${cfg.outDir}/football_data")
+    }
+    val joined = joinedObs.get("n").asInstanceOf[Long]
 
-    // pipeline_stats parity (`pipeline.py:103-118`) — one aggregation
-    // pass per input, scalars collected driver-side (A8/A9/A12).
-    val teams = fixtures.select(col("home_team").as("team"))
-      .unionByName(fixtures.select(col("away_team").as("team")))
-      .distinct()                                           // J2/U2
-    val fixtureCols = Seq("match_id", "date", "home_team", "away_team",
-      "league", "kickoff_time")
-    val fxAggs = Seq(
-      count(lit(1)).as("n"),
-      countDistinct(col("league")).as("leagues"),
-      min(col("date")).cast("string").as("start_date"),
-      max(col("date")).cast("string").as("end_date")) ++
-      fixtureCols.map(c =>
-        sum(col(c).isNotNull.cast("long")).as(s"nn_$c"))
-    val fxAgg = fixtures.agg(fxAggs.head, fxAggs.tail: _*)
-    val fx = fxAgg.collect()(0)
-    val joined = combined.count()
-    val nFix = fx.getAs[Long]("n")
+    // The history sink is written last. The football_data write's two
+    // broadcast hash relations (a full memory page each, 16 MB at local[4]
+    // with a 3 GB heap, however small the dim) stay pinned in the block
+    // manager's memory store until the listener queues drop that write's
+    // plan and the context cleaner runs; ending on the broadcast-free
+    // history write lets that happen before `run` returns.
+    withJobDescription(spark, "pipeline:history") {
+      writeCsv(isoDates(history), s"${cfg.outDir}/history")
+    }
+
+    // A null team name is one distinct team, as in a distinct() count;
+    // collect_set skips nulls, the non-null counts show whether one exists.
+    def nonNull(c: String) = fx(s"nn_$c").asInstanceOf[Long]
+    val nullTeam =
+      if (nonNull("home_team") < nFix || nonNull("away_team") < nFix) 1 else 0
     val completion =
-      if (nFix == 0) 0.0
-      else fixtureCols.map(c => fx.getAs[Long](s"nn_$c").toDouble / nFix)
-        .sum / fixtureCols.size
+      fixtureCols.map(c => nonNull(c).toDouble / nFix).sum / fixtureCols.size
 
     val stats = Stats(
       fixturesCount = nFix,
-      teamsCount = teams.count(),
+      teamsCount = fx("named_teams").asInstanceOf[Int] + nullTeam,
       joinedRecords = joined,
-      leaguesCovered = fx.getAs[Long]("leagues"),
+      leaguesCovered = fx("leagues").asInstanceOf[Int],
       dataCompletion = completion,
-      startDate = Option(fx.getAs[String]("start_date")).getOrElse(""),
-      endDate = Option(fx.getAs[String]("end_date")).getOrElse(""),
+      startDate = Option(fx("start_date")).fold("")(_.toString),
+      endDate = Option(fx("end_date")).fold("")(_.toString),
       lookbackMatches = cfg.lookbackMatches)
 
     // K4 — stats JSON sink.
@@ -176,6 +201,17 @@ object Pipeline {
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(s"${cfg.outDir}/pipeline_stats.json"), statsJson)
     stats
+  }
+
+  /** Runs `body` with the Spark jobs it starts described as `desc`, then
+    * restores the caller's description.
+    */
+  private def withJobDescription[T](spark: SparkSession, desc: String)
+                                   (body: => T): T = {
+    val sc = spark.sparkContext
+    val previous = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(desc)
+    try body finally sc.setJobDescription(previous)
   }
 
   /** Date columns → ISO strings at sinks (golden parity with the

@@ -124,9 +124,17 @@ class IngestSpec extends SparkSpec {
         "result", "goals_for", "goals_against", "shots", "shots_on_target")
       .write.option("header", "true").csv(s"$dir/hist")
     // today is after every fixture → future filter empties the frame
+    val out = s"$dir/out"
     val stats = Pipeline.run(spark, Pipeline.Config(
-      s"$dir/fx", s"$dir/hist", s"$dir/out", today = "2025-05-23"))
-    assert(stats.fixturesCount == 0 && stats.joinedRecords == 0)
+      s"$dir/fx", s"$dir/hist", out, today = "2025-05-23"))
+    assert(stats == Pipeline.Stats(0, 0, 0, 0, 0.0, "", "", 7))
+    import java.nio.file.{Files, Paths}
+    assert(Files.readString(Paths.get(s"$out/pipeline_stats.json")) ==
+      """{"fixtures_count":0,"teams_count":0,"joined_records":0}""")
+    // the downstream stages never ran
+    assert(Files.exists(Paths.get(s"$out/fixtures")))
+    assert(!Files.exists(Paths.get(s"$out/history")))
+    assert(!Files.exists(Paths.get(s"$out/football_data")))
   }
 
   test("corrupt JSONL lines land in quarantine, good rows parse clean") {

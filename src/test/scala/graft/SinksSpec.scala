@@ -1,6 +1,7 @@
 package graft
 
 import java.nio.file.Files
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Sources/sinks (S1/S7, K1–K4) and set-ops on heterogeneous frames (U1). */
@@ -76,28 +77,7 @@ class SinksSpec extends SparkSpec {
 
   test("Pipeline end-to-end: stages, sinks, stats JSON parity") {
     val dir = tmp()
-    // raw fixtures in the matches-table shape (FIXTURES.md §1)
-    val fixturesCsv = s"$dir/raw_fixtures"
-    Seq(
-      ("2025-06-01", "1", "Arsenal FC", "Chelsea", "Premier League", "England",
-        "1748775000", "12:30", "Not started", "", "1", "api"),
-      ("2025-06-02", "2", "Man Utd", "Spurs", "Premier League", "England",
-        "1748862000", "15:00", "Not started", "", "1", "api")
-    ).toDF("date", "id", "home_team", "away_team", "league", "country",
-      "start_timestamp", "start_time", "status", "venue", "round", "source")
-      .write.option("header", "true").csv(fixturesCsv)
-    // history for two of the teams
-    val historyCsv = s"$dir/raw_history"
-    Seq(
-      ("Arsenal", "2024-2025", "2025-05-01", "PL", "Home", "Brentford",
-        "W", "2", "0", "12", "5"),
-      ("Arsenal", "2024-2025", "2025-05-10", "PL", "Away", "Fulham",
-        "D", "1", "1", "9", "3"),
-      ("Chelsea", "2024-2025", "2025-05-03", "PL", "Home", "Everton",
-        "L", "0", "1", "7", "2")
-    ).toDF("team", "season", "date", "competition", "venue", "opponent",
-      "result", "goals_for", "goals_against", "shots", "shots_on_target")
-      .write.option("header", "true").csv(historyCsv)
+    val (fixturesCsv, historyCsv) = SinksSpec.toyFeed(spark, dir)
 
     spark.catalog.clearCache() // isolate the post-run cache assertion
     // A pre-existing user cache must SURVIVE the run (run releases only
@@ -133,5 +113,37 @@ class SinksSpec extends SparkSpec {
     assert(after.size == 1,
       s"Pipeline.run cache leak or over-release: ${after.keySet}")
     userCached.unpersist()
+  }
+}
+
+object SinksSpec {
+
+  /** The toy feed: two upcoming fixtures in the matches-table shape
+    * (FIXTURES.md §1) and history for two of their teams, written as CSV
+    * under `dir`. Returns the fixtures and history paths.
+    */
+  def toyFeed(spark: SparkSession, dir: String): (String, String) = {
+    import spark.implicits._
+    val fixturesCsv = s"$dir/raw_fixtures"
+    Seq(
+      ("2025-06-01", "1", "Arsenal FC", "Chelsea", "Premier League", "England",
+        "1748775000", "12:30", "Not started", "", "1", "api"),
+      ("2025-06-02", "2", "Man Utd", "Spurs", "Premier League", "England",
+        "1748862000", "15:00", "Not started", "", "1", "api")
+    ).toDF("date", "id", "home_team", "away_team", "league", "country",
+      "start_timestamp", "start_time", "status", "venue", "round", "source")
+      .write.option("header", "true").csv(fixturesCsv)
+    val historyCsv = s"$dir/raw_history"
+    Seq(
+      ("Arsenal", "2024-2025", "2025-05-01", "PL", "Home", "Brentford",
+        "W", "2", "0", "12", "5"),
+      ("Arsenal", "2024-2025", "2025-05-10", "PL", "Away", "Fulham",
+        "D", "1", "1", "9", "3"),
+      ("Chelsea", "2024-2025", "2025-05-03", "PL", "Home", "Everton",
+        "L", "0", "1", "7", "2")
+    ).toDF("team", "season", "date", "competition", "venue", "opponent",
+      "result", "goals_for", "goals_against", "shots", "shots_on_target")
+      .write.option("header", "true").csv(historyCsv)
+    (fixturesCsv, historyCsv)
   }
 }
